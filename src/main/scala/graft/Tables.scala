@@ -27,6 +27,7 @@ object Tables {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
+    val readFooter = graft.store.FileStats.footerReader(conf)
     var total = 0L
     // listStatus recursion, not listFiles(recursive): the latter loads
     // permissions eagerly — a forked `ls` per entry on the local FS.
@@ -41,11 +42,9 @@ object Tables {
           fs.listStatus(st.getPath).foreach(walk)
       } else {
         val n = st.getPath.getName
-        if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-          try total += r.getRecordCount finally r.close()
-        }
+        if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+          total += graft.store.FileStats.rowCount(
+            readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)))
       }
     walk(fs.getFileStatus(root))
     total

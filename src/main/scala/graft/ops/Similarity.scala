@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.functions.VectorExpressions.dotD
+import graft.store.FileStats
 
 /** Embedding similarity search over `ArrayType(FloatType)` columns.
   *
@@ -55,78 +56,6 @@ object Similarity {
   }
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
-
-  /** EXACT row count of a DataFrame from metadata only — parquet footer
-    * record counts of its file-relation leaves, or local-relation sizes;
-    * None when any leaf is an unknown source OR the plan contains any
-    * node that changes row counts: multiplying (Join/Generate/Expand) or
-    * SHRINKING (Filter/Aggregate/Deduplicate/Sample/Limit/set-ops). The
-    * shrinking check matters for fit-sample sizing: a footer sum over a
-    * `corpus.where(...)` plan is only an upper bound, and a fraction
-    * `maxFitRows/upperBound` applied to the far-fewer filtered rows
-    * yields a sample of `selectivity·maxFitRows` — possibly EMPTY on a
-    * selective filter, crashing (or silently degrading) the KMeans/PQ
-    * fit where a count() would have been exact. Shrunk plans therefore
-    * fall back to the count() job rather than mis-size the sample.
-    * Projections/sorts/windows/unions preserve counts, so the returned
-    * value is exact — which is what lets [[ivfTopK]]/[[pqTopK]] skip the
-    * default-path `count()` — an extra full-corpus stage at 100 TB —
-    * when the caller passes no explicit `corpusRows` hint.
-    *
-    * Cost: one driver-side footer read per file, every call (planning
-    * caches file LISTINGS, not footer contents). Bounded at
-    * [[MaxFooterReads]] files — a many-thousand-file corpus falls back
-    * to the distributed count() rather than a serial driver walk.
-    */
-  private[graft] def planRowUpperBound(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val plan = df.queryExecution.optimizedPlan
-    // ALLOWLIST of count-preserving nodes, not a blocklist of
-    // count-changing ones: typed-API operators survive optimization as
-    // object nodes a blocklist never enumerated (TypedFilter,
-    // MapPartitions, FlatMapGroups*, CoGroup — all row-changing), and
-    // future node types default the same way. Unknown ⇒ refuse; the
-    // fallback is a correct count() job, so the only cost of refusing
-    // too much is the one extra stage this path exists to skip.
-    val countPreserving: LogicalPlan => Boolean = {
-      case _: Project | _: Sort | _: Union => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.Window => true
-      case _: RepartitionOperation => true // Repartition/RepartitionByExpression
-      case _: SubqueryAlias => true
-      case _: LocalRelation => true
-      case _: LogicalRelation => true
-      case _ => false
-    }
-    if (!plan.collect { case n => n }.forall(countPreserving)) return None
-    val counts = plan.collectLeaves().map {
-      case l: LocalRelation => Some(l.data.length.toLong)
-      case lr: LogicalRelation => lr.relation match {
-        case fsr: HadoopFsRelation if fsr.fileFormat.isInstanceOf[ParquetFileFormat] =>
-          val conf = df.sparkSession.sparkContext.hadoopConfiguration
-          val files = fsr.location.inputFiles
-          if (files.length > MaxFooterReads) None
-          else try Some(files.iterator.map { p =>
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(p), conf))
-            try r.getRecordCount finally r.close()
-          }.sum)
-          catch { case scala.util.control.NonFatal(_) => None }
-        case _ => None
-      }
-      case _ => None
-    }
-    if (counts.nonEmpty && counts.forall(_.isDefined)) Some(counts.flatten.sum)
-    else None
-  }
-
-  /** Footer-walk budget for [[planRowUpperBound]]: past this many files a
-    * serial driver walk costs more than the column-pruned count() stage
-    * it would save.
-    */
-  private val MaxFooterReads = 2048
 
   /** L2-normalize once per row (single native call — see
     * [[org.apache.spark.sql.graft.L2NormalizeExpr]]) so pair scoring is a
@@ -934,8 +863,8 @@ object Similarity {
     // Row counts only when the route actually depends on them —
     // maxExactRows = Long.MaxValue (pinned-exact callers, e.g. the
     // graded query) and <= 0 (forced-routed) skip the two count jobs.
-    lazy val nSrc = planRowUpperBound(src).getOrElse(src.count())
-    lazy val nTgt = planRowUpperBound(tgt).getOrElse(tgt.count())
+    lazy val nSrc = FileStats.planRowUpperBound(src).getOrElse(src.count())
+    lazy val nTgt = FileStats.planRowUpperBound(tgt).getOrElse(tgt.count())
     val exact = maxExactRows == Long.MaxValue ||
       (maxExactRows > 0 && nSrc + nTgt <= maxExactRows)
     def knn(corpus: DataFrame, queries: DataFrame) =
@@ -1114,7 +1043,7 @@ object Similarity {
       threshold: Double,
       numBlocks: Int = 16,
       maxExactRows: Long = DefaultExactCosineRows): DataFrame = {
-    val rows = planRowUpperBound(corpus).getOrElse(corpus.count())
+    val rows = FileStats.planRowUpperBound(corpus).getOrElse(corpus.count())
     val pairs = cosineDetectorFor(rows, maxExactRows) match {
       case "exact" => nearDupPairs(corpus, idCol, vecCol, threshold, numBlocks)
       case _ => semDedupPairs(corpus, idCol, vecCol, threshold,
@@ -1335,7 +1264,7 @@ object Similarity {
     val (nl, sizedRows) =
       if (nlist > 0) (nlist, corpusRows)
       else {
-        val rows = corpusRows.orElse(planRowUpperBound(corpus)).getOrElse(corpus.count())
+        val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
         (ivfNlistFor(rows), Some(rows))
       }
     // One bounded sample feeds BOTH trainers (coarse cells + PQ codebook).
@@ -1419,7 +1348,7 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must be divisible by m $m")
     val nvCol = if (preNormalized) col(vecCol) else normalize(asDouble(col(vecCol)))
     val e = corpus.select(nvCol.as("nv"))
-    val nRows = corpusRows.orElse(planRowUpperBound(e)).getOrElse(e.count())
+    val nRows = corpusRows.orElse(FileStats.planRowUpperBound(e)).getOrElse(e.count())
     val fitInput =
       if (nRows <= maxFitRows) e
       else e.sample(withReplacement = false, maxFitRows.toDouble / nRows, seed = 42L)
@@ -1533,7 +1462,7 @@ object Similarity {
     *
     * `corpusRows` is the caller-supplied corpus size hint (e.g. from
     * table metadata — [[graft.Tables.parquetRowCount]] reads it from
-    * parquet footers driver-side). Without a hint, [[planRowUpperBound]]
+    * parquet footers driver-side). Without a hint, [[FileStats.planRowUpperBound]]
     * derives one from the plan's own parquet footers; only plans with
     * non-file sources fall back to a count() job (column-pruned, but
     * still an extra stage over a 100 TB corpus).
@@ -1549,7 +1478,7 @@ object Similarity {
     val e = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
       .withColumn("nv", normalize(col("v")))
       .withColumn("features", array_to_vector(col("nv")))
-    val nRows = corpusRows.orElse(planRowUpperBound(e)).getOrElse(e.count())
+    val nRows = corpusRows.orElse(FileStats.planRowUpperBound(e)).getOrElse(e.count())
     val fitInput0 =
       if (nRows <= maxFitRows) e
       else e.sample(withReplacement = false, maxFitRows.toDouble / nRows, seed = 42L)
@@ -1558,7 +1487,7 @@ object Similarity {
     // limit(1) job only when sampling actually happened and refit from
     // a bounded prefix instead of crashing a non-empty corpus. (The
     // footer path can no longer overestimate: shrunk plans fall back to
-    // count() — see [[planRowUpperBound]].)
+    // count() — see [[FileStats.planRowUpperBound]].)
     val fitInput =
       if (nRows <= maxFitRows || fitInput0.limit(1).count() > 0) fitInput0
       else e.limit(math.min(maxFitRows, Int.MaxValue.toLong).toInt)
@@ -1613,7 +1542,7 @@ object Similarity {
     val (nl, sizedRows) =
       if (nlist > 0) (nlist, corpusRows)
       else {
-        val rows = corpusRows.orElse(planRowUpperBound(corpus)).getOrElse(corpus.count())
+        val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
         (semDedupNlistFor(rows), Some(rows))
       }
     require(assignProbes >= 1 && assignProbes <= nl,
@@ -1940,7 +1869,7 @@ object Similarity {
       .unionByName(reference.select(
         struct(lit(1).as("side"), col(idCol).as("id")).as("uid"),
         asDouble(col(vecCol)).as("v")))
-    val rows = combinedRows.orElse(planRowUpperBound(u)).getOrElse(u.count())
+    val rows = combinedRows.orElse(FileStats.planRowUpperBound(u)).getOrElse(u.count())
     val nl = if (nlist > 0) nlist else semDedupNlistFor(rows)
     val probes = math.min(assignProbes, nl)
     val (assigned, centroids, _) = fitCells(u, "uid", "v", nl, maxFitRows, Some(rows))
@@ -1979,7 +1908,7 @@ object Similarity {
       threshold: Double,
       maxExactRows: Long = DefaultExactCosineRows): DataFrame = {
     val rows =
-      (planRowUpperBound(target), planRowUpperBound(reference)) match {
+      (FileStats.planRowUpperBound(target), FileStats.planRowUpperBound(reference)) match {
         case (Some(t), Some(r)) => t + r
         case _ => target.count() + reference.count()
       }
@@ -2096,7 +2025,7 @@ object Similarity {
       maxExactRows: Long = DefaultExactCosineRows,
       assignProbes: Int = 3,
       maxFitRows: Long = 100000L): DataFrame = {
-    val rows = planRowUpperBound(embs).getOrElse(embs.count())
+    val rows = FileStats.planRowUpperBound(embs).getOrElse(embs.count())
     cosineDetectorFor(rows, maxExactRows) match {
       case "exact" => positivePairsExact(embs, idCol, vecCol, labelCol)
       case _ => positivePairsCellPruned(embs, idCol, vecCol, labelCol,
@@ -2210,7 +2139,7 @@ object Similarity {
       maxFitRows: Long = 100000L): DataFrame = {
     val c = corpus.select(col(idCol).cast("long").as("cid"),
       col(labelCol).as("clabel"), normalize(asDouble(col(vecCol))).as("vc"))
-    val rows = planRowUpperBound(corpus).getOrElse(corpus.count())
+    val rows = FileStats.planRowUpperBound(corpus).getOrElse(corpus.count())
     val top = cosineDetectorFor(rows, maxExactRows) match {
       case "exact" =>
         // Pre-normalize once per side so the 5M-pair hot loop is a
@@ -2341,7 +2270,7 @@ object Similarity {
       maxFitRows: Long,
       corpusRows: Option[Long],
       excludeSelf: Boolean = true): DataFrame = {
-    val rows = corpusRows.orElse(planRowUpperBound(corpus)).getOrElse(corpus.count())
+    val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
     val nl = ivfNlistFor(rows)
     val probes = math.min(math.max(1, nProbe), nl)
     val (assigned, centroids, _) =
@@ -2381,7 +2310,7 @@ object Similarity {
     val (nl, sizedRows) =
       if (nlist > 0) (nlist, corpusRows)
       else {
-        val rows = corpusRows.orElse(planRowUpperBound(corpus)).getOrElse(corpus.count())
+        val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
         (ivfNlistFor(rows), Some(rows))
       }
     val (assigned, centroids, _) =

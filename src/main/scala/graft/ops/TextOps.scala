@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.store.FileStats
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language ID, fingerprinting, shingling.
   *
@@ -1347,7 +1349,7 @@ object TextOps {
     val y = when(label.getOrElse(qualityRules(col(textCol)).keep), 1d).otherwise(0d)
     // Size from parquet footers when the plan exposes them (driver-side
     // metadata, no job) — the count() job runs only for non-file inputs.
-    val n = Similarity.planRowUpperBound(docs).getOrElse(docs.count())
+    val n = FileStats.planRowUpperBound(docs).getOrElse(docs.count())
     // Driver route (r20, the BPE small-vocab pattern): when the WHOLE
     // input is fit-sample-sized, featurize distributed once, collect the
     // skinny (label, features) rows, and run the identical L-BFGS
@@ -1529,7 +1531,7 @@ object TextOps {
     // unchanged (it re-derives its row count; the duplicate count() job
     // exists only for non-footer-readable inputs above the cap, where
     // the fit itself dwarfs it).
-    val n = Similarity.planRowUpperBound(docs).getOrElse(docs.count())
+    val n = FileStats.planRowUpperBound(docs).getOrElse(docs.count())
     if (n > localFitMaxRows || n > maxTrainRows)
       return trainDomainModelWithMl(
         docs, textCol, labelCol, dim, maxTrainRows, regParam, maxIter,
@@ -1621,7 +1623,7 @@ object TextOps {
     require(labels.length >= 2, "need at least two domain labels")
     require(labels.length <= 4096,
       s"'$labelCol' has > 4096 distinct values — not a domain label column")
-    val n = Similarity.planRowUpperBound(docs).getOrElse(docs.count())
+    val n = FileStats.planRowUpperBound(docs).getOrElse(docs.count())
     val sampled =
       if (n <= maxTrainRows) docs
       else docs.where(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.store.Store
+import graft.store.{FileStats, Store}
 
 /** ANN index LIFECYCLE: build an IVF index once, persist it into the
   * versioned [[Store]], and serve top-k from the persisted artifact —
@@ -49,10 +49,10 @@ object VectorIndex {
       maxFitRows: Long = 100000L): (Int, Long) = {
     val spark = corpus.sparkSession
     // Footer-derived row count when the plan is count-preserving (exact
-    // by [[Similarity.planRowUpperBound]]'s contract) — skips a full
+    // by [[FileStats.planRowUpperBound]]'s contract) — skips a full
     // count() job per build; shrunk/unknown plans still pay the exact
     // count.
-    val rows = Similarity.planRowUpperBound(corpus).getOrElse(corpus.count())
+    val rows = FileStats.planRowUpperBound(corpus).getOrElse(corpus.count())
     val nl = if (nlist > 0) nlist else Similarity.ivfNlistFor(rows)
     val (assigned, centroids, _) =
       Similarity.fitCells(corpus, idCol, vecCol, nl, maxFitRows, Some(rows))

@@ -3,13 +3,14 @@ package graft.server
 import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.store.{Store, Wire}
+import graft.store.{FileStats, Store, Wire}
 
 /** Minimal HTTP façade mapping the reference `DataFrameClient` 1:1 onto
   * [[graft.store.Store]] — the reference's actual product boundary is
@@ -23,10 +24,18 @@ import graft.store.{Store, Wire}
   *   - The wire format is the reference's row-JSON (client.py:114
   *     `to_json(orient='records')` up, client.py:176 `pd.DataFrame(
   *     response.json())` down) via [[Wire]] — a full-materialization
-  *     transport by the REFERENCE'S design, so responses are
-  *     driver-collected. This façade is SDK-parity for client-sized
-  *     frames; cluster-scale access uses the Store/DataFrame API
-  *     directly (the wire itself is the bottleneck, not the engine).
+  *     transport by the REFERENCE'S design, so responses stream through
+  *     the driver. This façade is SDK-parity for client-sized frames;
+  *     cluster-scale access uses the Store/DataFrame API directly (the
+  *     wire itself is the bottleneck, not the engine).
+  *   - Per-request cost is set by fixed costs, not data work: a
+  *     client-sized GET checks its row cap from parquet footers (no
+  *     job) and streams as ONE Spark job ([[Wire.StreamChunkBytes]]
+  *     sizes the partitions); a list runs no job at all. Replies go out
+  *     with TCP_NODELAY (see the companion object) — with Nagle on, a
+  *     small reply waited ~40 ms on the client's delayed ACK.
+  *   - Every Spark job a request runs carries the description
+  *     `store-server <METHOD> <path>`, so a trace can attribute it.
   *   - `Authorization` headers are accepted and ignored by default,
   *     mirroring the ctor's no-op auth slots (SURVEY §2.1 #10: authn
   *     out of scope). `requireAuth = true` opts into wire-SHAPE parity
@@ -54,28 +63,46 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
 
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
+  private var executor: ExecutorService = _
 
   /** Start listening (loopback). Returns the bound port (ephemeral when
     * constructed with port 0).
     */
   def start(): Int = synchronized {
     require(server == null, "server already started")
+    StoreServer.enableNoDelay()
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/dataframes", (ex: HttpExchange) => handle(ex))
     // Small fixed pool: Store/Spark calls are thread-safe; one thread
     // per in-flight request keeps a slow upload from blocking a list.
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    val bound = server.getAddress.getPort
+    val threadIds = new java.util.concurrent.atomic.AtomicInteger()
+    executor = Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"store-server-$bound-${threadIds.incrementAndGet()}"))
+    server.setExecutor(executor)
     server.start()
-    server.getAddress.getPort
+    bound
   }
 
+  /** Stop listening and end the request threads. The pool's threads are
+    * non-daemon: left running, they keep the JVM alive after `main`
+    * returns. Waits briefly for requests already being handled.
+    */
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) {
+      server.stop(0)
+      executor.shutdown()
+      executor.awaitTermination(10, TimeUnit.SECONDS)
+      server = null
+      executor = null
+    }
   }
 
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath
     val method = ex.getRequestMethod
+    val sc = spark.sparkContext
+    sc.setJobDescription(s"store-server $method $path")
     try {
       if (requireAuth &&
           !Option(ex.getRequestHeaders.getFirst("Authorization"))
@@ -97,7 +124,10 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
       case e: Store.LoadError => respond(ex, 400, errorJson(e.getMessage))
       case scala.util.control.NonFatal(e) =>
         respond(ex, 500, errorJson(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-    } finally ex.close()
+    } finally {
+      sc.setJobDescription(null)
+      ex.close()
+    }
   }
 
   /** Request body stream honoring `Content-Encoding` — the reference's
@@ -163,19 +193,30 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
 
   /** GET /dataframes/{name}?external_key=...&use_last=true — returns the
     * rows as a records-orient JSON array (client.py:176 rebuilds a
-    * DataFrame straight from it). Over-cap tables answer 413 BEFORE any
-    * body byte (one cheap limit-probe job); in-cap responses stream as
-    * chunked partitions via `toLocalIterator` — the driver holds one
-    * partition of JSON strings at a time, never the whole frame.
+    * DataFrame straight from it).
+    *
+    * The row cap is checked BEFORE any body byte, so an over-cap table
+    * answers 413 with nothing streamed. The count is exact and comes
+    * from the parquet footers of the files the read resolved to
+    * ([[FileStats.planRowUpperBound]] — a store read is a projection
+    * over a parquet scan), so it costs no Spark job. Only when that
+    * count is unavailable (more footers than its budget) does a
+    * `limit(cap+1).count()` probe job decide.
+    *
+    * In-cap responses stream via `toLocalIterator` over
+    * [[Wire.toJsonRecords]]'s partitions, one job per partition: a
+    * client-sized frame is one partition, so the whole response is one
+    * Spark job. The driver holds one partition of JSON strings at a
+    * time, never the whole frame.
     */
   private def get(ex: HttpExchange, name: String): Unit = {
     val params = queryParams(ex)
     val df = store.get(name,
       externalKey = params.get("external_key"),
       useLast = params.get("use_last").exists(_.equalsIgnoreCase("true")))
-    val rows = Wire.toJsonRecords(df)
-    if (maxGetRows > 0 &&
-        rows.limit(math.min(maxGetRows + 1, Int.MaxValue.toLong).toInt).count() > maxGetRows) {
+    def overCap: Boolean = FileStats.planRowUpperBound(df).getOrElse(
+      df.limit(math.min(maxGetRows + 1, Int.MaxValue.toLong).toInt).count()) > maxGetRows
+    if (maxGetRows > 0 && overCap) {
       respond(ex, 413, errorJson(
         s"Result for '$name' exceeds $maxGetRows rows — too large for the " +
           "records-JSON wire format; read it through the Store DataFrame API " +
@@ -198,7 +239,7 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
       else ex.getResponseBody
     try {
       os.write('[')
-      val it = rows.toLocalIterator()
+      val it = Wire.toJsonRecords(df).toLocalIterator()
       var first = true
       while (it.hasNext) {
         if (!first) os.write(',')
@@ -258,5 +299,21 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
     ex.sendResponseHeaders(status, bytes.length.toLong)
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
+  }
+}
+
+object StoreServer {
+
+  /** Turns Nagle's algorithm off for every JDK `HttpServer` in this JVM.
+    * The JDK server reads `sun.net.httpserver.nodelay` once, at its first
+    * `HttpServer.create`, and has no other switch. With Nagle on, a
+    * reply small enough to fit one segment waits for the client's
+    * delayed ACK (~40 ms on Linux) — most of a list request's latency
+    * under two concurrent clients. An explicit setting of the property
+    * is kept.
+    */
+  private def enableNoDelay(): Unit = {
+    sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
+    ()
   }
 }

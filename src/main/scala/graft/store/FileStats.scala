@@ -7,6 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
+import org.apache.spark.sql.DataFrame
 
 /** Per-FILE column min/max statistics for data skipping — the layer
   * Delta/Iceberg add over a plain Hive layout, rebuilt from parquet's
@@ -31,6 +37,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * `relPath <TAB> column <TAB> kind <TAB> min <TAB> max`, URL-encoded
   * fields, kind ∈ {l: integral, d: floating, s: string}. Files with no
   * line for a queried column are never skipped (absence = unknown).
+  *
+  * The same footers also give exact row counts without a Spark job
+  * ([[planRowUpperBound]]); every driver-side footer read in the
+  * codebase goes through [[footerReader]].
   */
 object FileStats {
 
@@ -100,63 +110,59 @@ object FileStats {
     // listStatus returns QUALIFIED paths (scheme + authority) — qualify
     // the root the same way or the prefix strip silently fails.
     val rootStr = fs.makeQualified(root).toString
+    val readFooter = footerReader(conf)
     def walk(st: FileStatus): Unit =
       if (st.isDirectory) fs.listStatus(st.getPath).foreach(walk)
       else {
         val n = st.getPath.getName
         if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
           val rel = fs.makeQualified(st.getPath).toString.stripPrefix(rootStr).stripPrefix("/")
-          out += rel -> fileRanges(st, conf, cols)
+          out += rel -> fileRanges(readFooter(HadoopInputFile.fromStatus(st, conf)), cols)
         }
       }
     walk(fs.getFileStatus(root))
     out.result()
   }
 
-  private def fileRanges(
-      st: FileStatus, conf: Configuration, cols: Seq[String]): Map[String, ColRange] = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-    try {
-      // 0-ROW groups are dropped up front: they cannot contain matches,
-      // so they are neutral for every column. For POPULATED groups an
-      // 'empty' Statistics object is ambiguous — it also means
-      // stats-not-recorded (parquet.column.statistics.enabled=false, a
-      // foreign writer) — so it must make the file's range UNKNOWN
-      // (always scanned), never a zero-width range that would silently
-      // skip live rows.
-      val blocks = reader.getFooter.getBlocks.asScala.filter(_.getRowCount > 0)
-      cols.flatMap { c =>
-        val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath.toDotString == c))
-        val stats = chunks.map(_.getStatistics)
-        // Every populated row group must carry usable stats, else the
-        // file's range is unknown for this column.
-        val nonEmpty = stats.filter(s => s != null && s.getNumNulls >= 0 && !s.isEmpty)
-        if (chunks.size != blocks.size || nonEmpty.size != blocks.size ||
-          nonEmpty.exists(!_.hasNonNullValue)) None
-        else {
-          val ranges = nonEmpty.filter(_.hasNonNullValue).flatMap(s =>
-            (s.genericGetMin, s.genericGetMax) match {
-              case (mn: java.lang.Integer, mx: java.lang.Integer) =>
-                Some(ColRange("l", mn.toString, mx.toString))
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                Some(ColRange("l", mn.toString, mx.toString))
-              case (mn: java.lang.Float, mx: java.lang.Float) =>
-                Some(ColRange("d", mn.toString, mx.toString))
-              case (mn: java.lang.Double, mx: java.lang.Double) =>
-                Some(ColRange("d", mn.toString, mx.toString))
-              case (mn: org.apache.parquet.io.api.Binary, mx: org.apache.parquet.io.api.Binary) =>
-                Some(ColRange("s", mn.toStringUsingUTF8, mx.toStringUsingUTF8))
-              case _ => None
-            })
-          if (ranges.isEmpty) None
-          else if (ranges.size < nonEmpty.count(_.hasNonNullValue)) None // mixed/unsupported types
-          else Some(c -> ColRange(ranges.head.kind,
-            ranges.map(_.min).min(rangeOrd(ranges.head.kind)),
-            ranges.map(_.max).max(rangeOrd(ranges.head.kind))))
-        }
-      }.toMap
-    } finally reader.close()
+  private def fileRanges(footer: ParquetMetadata, cols: Seq[String]): Map[String, ColRange] = {
+    // 0-ROW groups are dropped up front: they cannot contain matches,
+    // so they are neutral for every column. For POPULATED groups an
+    // 'empty' Statistics object is ambiguous — it also means
+    // stats-not-recorded (parquet.column.statistics.enabled=false, a
+    // foreign writer) — so it must make the file's range UNKNOWN
+    // (always scanned), never a zero-width range that would silently
+    // skip live rows.
+    val blocks = footer.getBlocks.asScala.filter(_.getRowCount > 0)
+    cols.flatMap { c =>
+      val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath.toDotString == c))
+      val stats = chunks.map(_.getStatistics)
+      // Every populated row group must carry usable stats, else the
+      // file's range is unknown for this column.
+      val nonEmpty = stats.filter(s => s != null && s.getNumNulls >= 0 && !s.isEmpty)
+      if (chunks.size != blocks.size || nonEmpty.size != blocks.size ||
+        nonEmpty.exists(!_.hasNonNullValue)) None
+      else {
+        val ranges = nonEmpty.filter(_.hasNonNullValue).flatMap(s =>
+          (s.genericGetMin, s.genericGetMax) match {
+            case (mn: java.lang.Integer, mx: java.lang.Integer) =>
+              Some(ColRange("l", mn.toString, mx.toString))
+            case (mn: java.lang.Long, mx: java.lang.Long) =>
+              Some(ColRange("l", mn.toString, mx.toString))
+            case (mn: java.lang.Float, mx: java.lang.Float) =>
+              Some(ColRange("d", mn.toString, mx.toString))
+            case (mn: java.lang.Double, mx: java.lang.Double) =>
+              Some(ColRange("d", mn.toString, mx.toString))
+            case (mn: org.apache.parquet.io.api.Binary, mx: org.apache.parquet.io.api.Binary) =>
+              Some(ColRange("s", mn.toStringUsingUTF8, mx.toStringUsingUTF8))
+            case _ => None
+          })
+        if (ranges.isEmpty) None
+        else if (ranges.size < nonEmpty.count(_.hasNonNullValue)) None // mixed/unsupported types
+        else Some(c -> ColRange(ranges.head.kind,
+          ranges.map(_.min).min(rangeOrd(ranges.head.kind)),
+          ranges.map(_.max).max(rangeOrd(ranges.head.kind))))
+      }
+    }.toMap
   }
 
   private def rangeOrd(kind: String): Ordering[String] = kind match {
@@ -164,6 +170,98 @@ object FileStats {
     case "d" => Ordering.by(_.toDouble)
     case _ => Ordering.String
   }
+
+  /** Footer reader for a batch of parquet files that builds its read
+    * options ONCE. `ParquetFileReader.open(file)` derives fresh options
+    * from the Hadoop conf for every file, which measured several
+    * milliseconds a footer — most of a small table's metadata read;
+    * with shared options a footer read is the file open plus the footer
+    * bytes.
+    */
+  private[graft] def footerReader(conf: Configuration): InputFile => ParquetMetadata = {
+    val opts = HadoopReadOptions.builder(conf).build()
+    file => {
+      val reader = ParquetFileReader.open(file, opts)
+      try reader.getFooter finally reader.close()
+    }
+  }
+
+  /** Rows in one parquet file, from its footer. */
+  private[graft] def rowCount(footer: ParquetMetadata): Long =
+    footer.getBlocks.asScala.iterator.map(_.getRowCount).sum
+
+  /** EXACT row count of a DataFrame from metadata only — parquet footer
+    * record counts of its file-relation leaves, or local-relation sizes;
+    * None when any leaf is an unknown source OR the plan contains any
+    * node that changes row counts: multiplying (Join/Generate/Expand) or
+    * SHRINKING (Filter/Aggregate/Deduplicate/Sample/Limit/set-ops). The
+    * shrinking check matters for fit-sample sizing: a footer sum over a
+    * `corpus.where(...)` plan is only an upper bound, and a fraction
+    * `maxFitRows/upperBound` applied to the far-fewer filtered rows
+    * yields a sample of `selectivity·maxFitRows` — possibly EMPTY on a
+    * selective filter, crashing (or silently degrading) the KMeans/PQ
+    * fit where a count() would have been exact. Shrunk plans therefore
+    * fall back to the count() job rather than mis-size the sample.
+    * Projections/sorts/windows/unions preserve counts, so the returned
+    * value is exact — which is what lets
+    * [[graft.ops.Similarity.ivfTopK]]/[[graft.ops.Similarity.pqTopK]] skip the
+    * default-path `count()` — an extra full-corpus stage at 100 TB —
+    * when the caller passes no explicit `corpusRows` hint.
+    *
+    * Cost: one driver-side footer read per file, every call (planning
+    * caches file LISTINGS, not footer contents) — about a millisecond
+    * for a small table through [[footerReader]]. Bounded at
+    * [[MaxFooterReads]] files — a many-thousand-file corpus falls back
+    * to the distributed count() rather than a serial driver walk.
+    */
+  private[graft] def planRowUpperBound(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val plan = df.queryExecution.optimizedPlan
+    // ALLOWLIST of count-preserving nodes, not a blocklist of
+    // count-changing ones: typed-API operators survive optimization as
+    // object nodes a blocklist never enumerated (TypedFilter,
+    // MapPartitions, FlatMapGroups*, CoGroup — all row-changing), and
+    // future node types default the same way. Unknown ⇒ refuse; the
+    // fallback is a correct count() job, so the only cost of refusing
+    // too much is the one extra stage this path exists to skip.
+    val countPreserving: LogicalPlan => Boolean = {
+      case _: Project | _: Sort | _: Union => true
+      case _: org.apache.spark.sql.catalyst.plans.logical.Window => true
+      case _: RepartitionOperation => true // Repartition/RepartitionByExpression
+      case _: SubqueryAlias => true
+      case _: LocalRelation => true
+      case _: LogicalRelation => true
+      case _ => false
+    }
+    if (!plan.collect { case n => n }.forall(countPreserving)) return None
+    val counts = plan.collectLeaves().map {
+      case l: LocalRelation => Some(l.data.length.toLong)
+      case lr: LogicalRelation => lr.relation match {
+        case fsr: HadoopFsRelation if fsr.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          val conf = df.sparkSession.sparkContext.hadoopConfiguration
+          val files = fsr.location.inputFiles
+          if (files.length > MaxFooterReads) None
+          else try {
+            val readFooter = footerReader(conf)
+            Some(files.iterator.map(p =>
+              rowCount(readFooter(HadoopInputFile.fromPath(new Path(p), conf)))).sum)
+          }
+          catch { case scala.util.control.NonFatal(_) => None }
+        case _ => None
+      }
+      case _ => None
+    }
+    if (counts.nonEmpty && counts.forall(_.isDefined)) Some(counts.flatten.sum)
+    else None
+  }
+
+  /** Footer-walk budget for [[planRowUpperBound]]: past this many files a
+    * serial driver walk costs more than the column-pruned count() stage
+    * it would save.
+    */
+  private val MaxFooterReads = 2048
 
   def encode(stats: Seq[(String, Map[String, ColRange])]): String =
     stats.flatMap { case (rel, m) =>

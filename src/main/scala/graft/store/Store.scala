@@ -1538,7 +1538,18 @@ final class Store(
     if (!fs.exists(rootPath)) return Seq.empty
     val tables = Seq.newBuilder[TableInfo]
     def walk(dir: Path, rel: List[String]): Unit = {
-      val children = fs.listStatus(dir)
+      // A directory can vanish between its parent's listing and its own:
+      // a table's first load has no `_meta.json` yet, so the walk enters
+      // its `.staging_*` tree, which the load's committer and publish
+      // delete as they finish. A vanished directory holds no table. (The
+      // local filesystem reports a directory deleted mid-listing as a
+      // plain IOException, hence the existence re-check.)
+      val children =
+        try fs.listStatus(dir)
+        catch {
+          case _: java.io.FileNotFoundException if rel.nonEmpty => return
+          case _: java.io.IOException if rel.nonEmpty && !fs.exists(dir) => return
+        }
       val isTable = children.exists(_.getPath.getName == MetaFile)
       if (isTable) {
         val name = rel.reverse.mkString("/")

@@ -15,7 +15,20 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object Wire {
 
-  /** One JSON object per row, Spark-distributed (`df.toJSON`).
+  /** Estimated input bytes per partition of a [[toJsonRecords]] stream.
+    * A streaming consumer (`toLocalIterator`) runs one job per partition
+    * and holds one partition on the driver at a time, so this bounds
+    * both: a client-sized frame is one partition and one job, and a large
+    * one is cut into pieces of about this size. The estimate is the
+    * optimizer's, which for a parquet scan is on-disk bytes; the JSON
+    * text of a partition is several times larger.
+    */
+  val StreamChunkBytes: Long = 16L << 20
+
+  /** One JSON object per row, Spark-distributed (`df.toJSON`), in
+    * ceil(estimated bytes / [[StreamChunkBytes]]) partitions — fewer than
+    * the scan's splits, never more. Coalescing is a narrow merge of
+    * adjacent splits, so row order is unchanged.
     * Timestamp columns are pre-converted to EPOCH MILLIS to match the
     * reference wire (`to_json(orient='records')` emits numeric epochs;
     * Spark's own toJSON would emit ISO-8601 strings, which a
@@ -39,7 +52,14 @@ object Wire {
         case _ => col(f.name)
       }
     }
-    df.select(wireCols.toSeq: _*).toJSON
+    val wire = df.select(wireCols.toSeq: _*)
+    // Driver-side estimate, no job — the same sizing as Store.load's
+    // output files. Past ~16M chunks the input keeps its partitioning
+    // (coalesce only ever reduces).
+    val chunks = (wire.queryExecution.optimizedPlan.stats.sizeInBytes + StreamChunkBytes - 1) /
+      StreamChunkBytes
+    val sized = if (chunks <= (1 << 24)) wire.coalesce(chunks.toInt.max(1)) else wire
+    sized.toJSON
   }
 
   /** Rebuild a DataFrame from row-JSON with schema inference. */

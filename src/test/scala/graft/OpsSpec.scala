@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AsOfJoin
 import graft.ops.{Dedup, Mixture, Similarity, TextOps}
+import graft.store.FileStats
 
 /** Operator-level unit tests on hand-built frames with known answers. */
 class OpsSpec extends SparkSpec {
@@ -1417,27 +1418,27 @@ class OpsSpec extends SparkSpec {
     // gives the (upper-bound) count — no count() stage needed.
     val emb = spark.read.parquet(s"${sf("sf0.01")}/embeddings.parquet")
     val projected = emb.select(col("vec_id"), col("embedding"))
-    assert(Similarity.planRowUpperBound(projected).contains(500L))
+    assert(FileStats.planRowUpperBound(projected).contains(500L))
     // Row-SHRINKING plans must refuse too (r8, ADVICE r7): a footer sum
     // over a filtered scan is only an upper bound, and a fit-sample
     // fraction sized from it collapses to ~selectivity·maxFitRows rows —
     // empty on a selective filter. count() is the honest path there.
-    assert(Similarity.planRowUpperBound(emb.where(col("vec_id") < 10)).isEmpty,
+    assert(FileStats.planRowUpperBound(emb.where(col("vec_id") < 10)).isEmpty,
       "filter must refuse — the footer count is no longer exact")
-    assert(Similarity.planRowUpperBound(emb.limit(5)).isEmpty, "limit must refuse")
-    assert(Similarity.planRowUpperBound(emb.groupBy("vec_id").count()).isEmpty,
+    assert(FileStats.planRowUpperBound(emb.limit(5)).isEmpty, "limit must refuse")
+    assert(FileStats.planRowUpperBound(emb.groupBy("vec_id").count()).isEmpty,
       "aggregate must refuse")
-    assert(Similarity.planRowUpperBound(emb.sample(0.1)).isEmpty, "sample must refuse")
+    assert(FileStats.planRowUpperBound(emb.sample(0.1)).isEmpty, "sample must refuse")
     // Local relations know their exact size.
     val local = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    assert(Similarity.planRowUpperBound(local).contains(2L))
+    assert(FileStats.planRowUpperBound(local).contains(2L))
     // Row-MULTIPLYING plans must refuse: a leaf sum is no upper bound
     // under joins or explodes, and an undersized bound would let the
     // codebook fit-sample collect far more than maxFitRows.
     val joined = emb.as("a").crossJoin(emb.as("b"))
-    assert(Similarity.planRowUpperBound(joined).isEmpty, "join must refuse")
+    assert(FileStats.planRowUpperBound(joined).isEmpty, "join must refuse")
     val exploded = emb.select(col("vec_id"), explode(col("embedding")))
-    assert(Similarity.planRowUpperBound(exploded).isEmpty, "explode must refuse")
+    assert(FileStats.planRowUpperBound(exploded).isEmpty, "explode must refuse")
   }
 
   test("contaminationBloom flags a superset of the exact overlap, no false negatives") {

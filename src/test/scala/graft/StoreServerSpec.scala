@@ -42,6 +42,26 @@ class StoreServerSpec extends SparkSpec {
     http.send(HttpRequest.newBuilder(URI.create(s"$base$path")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
+  /** Runs `f`; returns its result and the number of Spark jobs that
+    * started meanwhile carrying the job description `description`.
+    */
+  private def jobsDescribed[T](description: String)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == description))
+          n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusTestBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val v = f
+      org.apache.spark.ListenerBusTestBridge.drain(sc)
+      (v, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("POST /dataframes/upload stores a records payload with key partitioning") {
     // The exact payload shape client.py:113-119 sends.
     val records = """[{\"date\":\"2024-01-01\",\"id\":7,\"value\":1.5},""" +
@@ -133,20 +153,42 @@ class StoreServerSpec extends SparkSpec {
     try {
       store.load((1L to 10L).map(i => (i, s"r$i")).toDF("id", "v"),
         "my-test/big", externalKey = "v1")
-      val over = getCapped("/dataframes/my-test/big")
+      // The cap is checked from parquet footers: the refusal runs no job.
+      val (over, overJobs) = jobsDescribed("store-server GET /dataframes/my-test/big")(
+        getCapped("/dataframes/my-test/big"))
       assert(over.statusCode() == 413, s"${over.statusCode()} ${over.body()}")
+      assert(overJobs == 0, "a 413 must not run a Spark job")
       assert(over.body().startsWith("""{"error":""") &&
         over.body().contains("exceeds 3 rows"), over.body())
       // In-cap table: the chunked stream must still be one well-formed
       // records array carrying every row.
       store.load((1L to 3L).map(i => (i, s"r$i")).toDF("id", "v"),
         "my-test/small", externalKey = "v1")
-      val ok = getCapped("/dataframes/my-test/small")
+      val (ok, okJobs) = jobsDescribed("store-server GET /dataframes/my-test/small")(
+        getCapped("/dataframes/my-test/small"))
       assert(ok.statusCode() == 200, ok.body())
+      assert(okJobs == 1, "an in-cap client-sized GET streams as one Spark job")
       assert(ok.body().startsWith("[") && ok.body().endsWith("]"), ok.body())
       assert((1L to 3L).forall(i => ok.body().contains(s""""id":$i""")), ok.body())
       assert(ok.body().count(_ == ',') >= 2, "3 records need 2+ separators")
     } finally capped.stop()
+  }
+
+  test("stop() ends the server's request threads") {
+    // Non-daemon request threads left running keep a JVM alive after its
+    // main returns.
+    val s = new StoreServer(spark, store)
+    val port = s.start()
+    def requestThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName.startsWith(s"store-server-$port-") && t.isAlive)
+    val r = http.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/dataframes"))
+      .GET().build(), HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200, r.body())
+    assert(requestThreads.nonEmpty, "the request ran on the server's pool")
+    s.stop()
+    val deadline = System.nanoTime() + 5000000000L
+    while (requestThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(requestThreads.isEmpty, requestThreads.map(_.getName).mkString(", "))
   }
 
   test("wire gzip: compressed upload round-trips; gzip offered -> gzip body (r9)") {

@@ -188,6 +188,26 @@ class StoreSpec extends SparkSpec {
     assertThrows[NoSuchElementException](store.get("nope"))
   }
 
+  test("list survives directories vanishing mid-walk (a concurrent first load's staging tree)") {
+    val dir = Files.createTempDirectory("graft_test_")
+    val store = new Store(spark, dir.toString)
+    store.load(sampleDf(), "a/t", externalKey = "v1")
+    // A table whose first load is in flight has no _meta.json, so list
+    // walks its uniquely named staging trees while the load deletes them.
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val churn = new Thread(() => {
+      var i = 0
+      while (!stop.get) {
+        Files.createDirectories(dir.resolve(s"b/t/.staging_$i/_temporary/0/task"))
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.resolve(s"b/t/.staging_$i").toFile)
+        i += 1
+      }
+    })
+    churn.start()
+    try (1 to 2000).foreach(_ => assert(store.list().map(_.name) == Seq("a/t")))
+    finally { stop.set(true); churn.join() }
+  }
+
   test("id bucket width is configurable and labels match README shape") {
     val store = freshStore(width = 500L)
     store.load(sampleDf(), "t", Map("id" -> "ID"), externalKey = "v1")
@@ -202,6 +222,13 @@ class StoreSpec extends SparkSpec {
     val back = Wire.fromJsonRecords(spark, Wire.toJsonRecords(df))
     assert(back.count() == 2)
     assert(back.columns.sorted.toSeq == Seq("id", "name", "v"))
+    // A client-sized frame encodes to ONE partition (one streaming job),
+    // whatever its input's split count, with row order unchanged.
+    val many = (1L to 100L).map(i => (i, s"r$i")).toDF("id", "name")
+    assert(many.rdd.getNumPartitions > 1)
+    val wire = Wire.toJsonRecords(many)
+    assert(wire.rdd.getNumPartitions == 1)
+    assert(wire.collect().toSeq == (1L to 100L).map(i => s"""{"id":$i,"name":"r$i"}"""))
   }
 
   test("wire shim epoch-encodes naive timestamps as UTC regardless of session tz") {
