@@ -31,9 +31,13 @@ import graft.store.{FileStats, Store, Wire}
   *   - Per-request cost is set by fixed costs, not data work: a
   *     client-sized GET checks its row cap from parquet footers (no
   *     job) and streams as ONE Spark job ([[Wire.StreamChunkBytes]]
-  *     sizes the partitions); a list runs no job at all. Replies go out
-  *     with TCP_NODELAY (see the companion object) — with Nagle on, a
-  *     small reply waited ~40 ms on the client's delayed ACK.
+  *     sizes the partitions); a client-sized upload is ONE Spark job
+  *     with one task — the JSON is decoded on the driver
+  *     ([[Wire.fromJsonRecords]]) and a keyed store write of
+  *     driver-resident rows needs no clustering shuffle; a list runs no
+  *     job at all. Replies go out with TCP_NODELAY (see the companion
+  *     object) — with Nagle on, a small reply waited ~40 ms on the
+  *     client's delayed ACK.
   *   - Every Spark job a request runs carries the description
   *     `store-server <METHOD> <path>`, so a trace can attribute it.
   *   - `Authorization` headers are accepted and ignored by default,
@@ -154,10 +158,12 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
 
   /** POST /dataframes/upload — body mirrors client.py:113-119:
     * `{dataframe: "<records json>", dataframe_name, columns_keys,
-    * external_key, keep_last}`.
+    * external_key, keep_last}`. The body is parsed once, straight from
+    * the request stream. A malformed payload or a bad key answers 400
+    * before any Spark job runs.
     */
   private def upload(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(new String(requestBody(ex).readAllBytes(), UTF_8))
+    val body = mapper.readTree(requestBody(ex))
     val records = Option(body.get("dataframe")).filterNot(_.isNull).map(_.asText())
       .getOrElse(throw new IllegalArgumentException("'dataframe' is required"))
     val name = Option(body.get("dataframe_name")).filterNot(_.isNull)

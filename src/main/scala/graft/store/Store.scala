@@ -6,6 +6,7 @@ import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
@@ -168,13 +169,20 @@ final class Store(
     }
     val partCols = VersionCol +: derived.map(_._1)
 
-    // Cluster rows by their target partition before writing: without this
-    // every task opens a file in every partition dir (tasks × dirs tiny
-    // files — 25× slower on a date-keyed load and a small-files problem
-    // at scale). One shuffle on the write path buys one file per
-    // partition dir; a skewed-hot partition still splits via
-    // maxRecordsPerFile, and AQE rebalances the shuffle on a real
-    // cluster.
+    // KEYED loads cluster rows by their target partition before writing:
+    // without this every task opens a file in every partition dir (tasks
+    // × dirs tiny files — 25× slower on a date-keyed load and a
+    // small-files problem at scale). One shuffle on the write path buys
+    // one file per partition dir; a skewed-hot partition still splits via
+    // maxRecordsPerFile, and AQE rebalances the shuffle on a real cluster.
+    // The exception is rows that already sit on the driver: when the
+    // optimized plan is a LocalRelation (the optimizer folds the version
+    // and partition-column projection into it) and its estimate fits one
+    // target file, ONE task writes them — still one file per partition
+    // dir, and no shuffle job in front of the write. That is every SDK
+    // upload. The rule is that narrow on purpose: `coalesce(1)` over a
+    // COMPUTED input (VectorIndex's cell assignments, say) would run all
+    // of that compute in one task.
     //
     // UNPARTITIONED loads size the file count from the DATA (guide §6
     // output sizing): inheriting the input's partitioning writes one
@@ -190,7 +198,11 @@ final class Store(
     // out deliberately (range-partitioned slices whose per-file min/max
     // sidecars are the point), and merging those files would erase the
     // ranges the sidecar exists to record.
-    val clustered =
+    //
+    // Optimizing the plan can already fail (an ANSI cast folded into a
+    // LocalRelation throws in the optimizer), so this runs inside the
+    // load's try below and surfaces as a LoadError like a failed write.
+    def clustered: DataFrame =
       if (derived.isEmpty && statsCols.isEmpty) {
         val estBytes = augmented.queryExecution.optimizedPlan.stats.sizeInBytes
         val nFiles: BigInt = estBytes / LoadTargetFileBytes + 1
@@ -200,7 +212,11 @@ final class Store(
         if (nFiles <= (1 << 24)) augmented.coalesce(nFiles.toInt.max(1))
         else augmented
       } else if (derived.isEmpty) augmented
-      else augmented.repartition(partCols.map(col): _*)
+      else augmented.queryExecution.optimizedPlan match {
+        case local: LocalRelation if local.stats.sizeInBytes <= LoadTargetFileBytes =>
+          augmented.coalesce(1)
+        case _ => augmented.repartition(partCols.map(col): _*)
+      }
 
     val tableDir = new Path(rootPath, relPath)
     assertNoTableNesting(relPath, tableDir)
@@ -221,12 +237,12 @@ final class Store(
     // second names the survivor — same contract as the reference's
     // S3/DynamoDB backend, which has no cross-writer transaction either.
     val staging = new Path(tableDir, s".staging_${java.util.UUID.randomUUID().toString.take(12)}")
-    var writer = clustered.write
-      .partitionBy(partCols: _*)
-      .mode(SaveMode.Overwrite)
-    if (maxRecordsPerFile > 0)
-      writer = writer.option("maxRecordsPerFile", maxRecordsPerFile)
     try {
+      var writer = clustered.write
+        .partitionBy(partCols: _*)
+        .mode(SaveMode.Overwrite)
+      if (maxRecordsPerFile > 0)
+        writer = writer.option("maxRecordsPerFile", maxRecordsPerFile)
       writer.parquet(staging.toString)
       // File-level min/max sidecar (data skipping, [[FileStats]]): hoist
       // the freshly-written footers' statistics BEFORE the merge — the

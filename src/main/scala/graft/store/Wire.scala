@@ -1,6 +1,7 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.json.JsonBridge
 
 /** Row-oriented JSON wire-format shims, API-compat with the reference's
   * transport: upload serializes `df.to_json(orient='records')`
@@ -12,6 +13,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * Note the reference's wire format is lossy (timestamps → epoch millis,
   * SURVEY.md §1.1); `fromJsonRecords` therefore re-infers schema exactly
   * like `pd.DataFrame(response.json())` does.
+  *
+  * Both directions are sized so a client-sized frame costs at most one
+  * Spark job: `toJsonRecords` streams in one partition, and
+  * `fromJsonRecords` decodes a driver-resident payload on the driver, so
+  * the store write that consumes it is the upload's only job.
   */
 object Wire {
 
@@ -62,7 +68,19 @@ object Wire {
     sized.toJSON
   }
 
-  /** Rebuild a DataFrame from row-JSON with schema inference. */
+  /** Rebuild a DataFrame from row-JSON with schema inference — the
+    * schema and rows of `spark.read.json(json)`, malformed records
+    * included (they surface in the corrupt-record column).
+    *
+    * Two routes, one result. When `json` already sits on the driver (its
+    * analyzed plan is a `LocalRelation`, as `createDataset(Seq(body))`
+    * builds for an upload), it is decoded right there by
+    * [[org.apache.spark.sql.catalyst.json.JsonBridge]] into a
+    * `LocalRelation` frame: no inference job, and the consuming job does
+    * not parse the JSON again. Any other input goes through
+    * `spark.read.json`, which runs a schema-inference job and parses in
+    * the consuming job's tasks.
+    */
   def fromJsonRecords(spark: SparkSession, json: Dataset[String]): DataFrame =
-    spark.read.json(json)
+    JsonBridge.readLocal(spark, json).getOrElse(spark.read.json(json))
 }

@@ -66,13 +66,17 @@ class StoreServerSpec extends SparkSpec {
     // The exact payload shape client.py:113-119 sends.
     val records = """[{\"date\":\"2024-01-01\",\"id\":7,\"value\":1.5},""" +
       """{\"date\":\"2024-01-02\",\"id\":1503,\"value\":2.5}]"""
-    val r = post("/dataframes/upload",
-      s"""{"dataframe": "$records",
-         | "dataframe_name": "my-test/test1",
-         | "columns_keys": {"date": "Date", "id": "ID"},
-         | "external_key": "v1",
-         | "keep_last": false}""".stripMargin)
+    val (r, jobs) = jobsDescribed("store-server POST /dataframes/upload")(
+      post("/dataframes/upload",
+        s"""{"dataframe": "$records",
+           | "dataframe_name": "my-test/test1",
+           | "columns_keys": {"date": "Date", "id": "ID"},
+           | "external_key": "v1",
+           | "keep_last": false}""".stripMargin))
     assert(r.statusCode() == 200, r.body())
+    // The JSON decodes on the driver and the keyed write of driver-resident
+    // rows needs no clustering shuffle: the write is the upload's one job.
+    assert(jobs == 1, "a client-sized keyed upload runs as one Spark job")
     assert(r.body().contains("\"version\":\"v1\""), r.body())
     // And the store really partitioned it.
     val parts = store.getPartitioned("my-test/test1")
@@ -107,10 +111,12 @@ class StoreServerSpec extends SparkSpec {
 
   test("errors come back as status + {'error': ...} bodies (client.py:132-137)") {
     // bad key type -> 400 with the reference-shaped message
-    val bad = post("/dataframes/upload",
+    val upload = "store-server POST /dataframes/upload"
+    val (bad, badJobs) = jobsDescribed(upload)(post("/dataframes/upload",
       """{"dataframe": "[{\"a\":1}]", "dataframe_name": "t-err",
-        | "columns_keys": {"a": "Hash"}}""".stripMargin)
+        | "columns_keys": {"a": "Hash"}}""".stripMargin))
     assert(bad.statusCode() == 400, bad.body())
+    assert(badJobs == 0, "a rejected key type must not run a Spark job")
     assert(bad.body().startsWith("""{"error":""") &&
       bad.body().contains("Invalid key type"), bad.body())
     // missing table -> 404
@@ -126,10 +132,11 @@ class StoreServerSpec extends SparkSpec {
     assert(noRoute.statusCode() == 404 &&
       noRoute.body().startsWith("""{"error":"""), noRoute.body())
     // malformed records payload -> 400, never a silently stored garbage table
-    val garbage = post("/dataframes/upload",
-      """{"dataframe": "not records json", "dataframe_name": "t-garbage"}""")
+    val (garbage, garbageJobs) = jobsDescribed(upload)(post("/dataframes/upload",
+      """{"dataframe": "not records json", "dataframe_name": "t-garbage"}"""))
     assert(garbage.statusCode() == 400 &&
       garbage.body().contains("records-orient"), garbage.body())
+    assert(garbageJobs == 0, "a malformed payload must not run a Spark job")
     assert(get("/dataframes/t-garbage").statusCode() == 404)
     // JSON null name/dataframe -> 400, not a table named "null"
     val nullName = post("/dataframes/upload",

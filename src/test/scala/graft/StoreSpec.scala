@@ -229,6 +229,77 @@ class StoreSpec extends SparkSpec {
     val wire = Wire.toJsonRecords(many)
     assert(wire.rdd.getNumPartitions == 1)
     assert(wire.collect().toSeq == (1L to 100L).map(i => s"""{"id":$i,"name":"r$i"}"""))
+    // A computed (non-LocalRelation) record set decodes through
+    // spark.read.json, the distributed route.
+    assert(!back.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+  }
+
+  /** Runs `f`; returns the executed plan text of every file write it ran. */
+  private def writePlans(f: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains("InsertIntoHadoopFsRelationCommand")) plans.add(plan)
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    // Drain first: an earlier write's event must not reach this listener.
+    org.apache.spark.ListenerBusTestBridge.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      f
+      org.apache.spark.ListenerBusTestBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Data files per leaf partition dir of a table's one version. */
+  private def filesPerDir(root: String, table: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(java.nio.file.Paths.get(root, table))
+    try walk.iterator().asScala.map(_.toFile)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .toSeq.groupBy(_.getParentFile.getName).map { case (d, fs) => d -> fs.size }
+    finally walk.close()
+  }
+
+  test("keyed load of driver-resident rows writes without a shuffle, one file per dir") {
+    val root = Files.createTempDirectory("graft_local_").toString
+    val store = new Store(spark, root)
+    val plans = writePlans(
+      store.load(sampleDf(), "t", Map("date" -> "Date", "id" -> "ID"), externalKey = "v1"))
+    assert(plans.size == 1, plans)
+    assert(!plans.head.contains("Exchange"), plans.head)
+    assert(filesPerDir(root, "t") == Map(
+      "__p_id=from_0_to_1000" -> 1, "__p_id=from_1000_to_2000" -> 1,
+      "__p_id=from_2000_to_3000" -> 1))
+    assert(store.get("t").orderBy("id").collect().toSeq ==
+      sampleDf().orderBy("id").collect().toSeq)
+    // A cast that fails while the optimizer folds it into the local rows
+    // is still a load error, and leaves no table behind.
+    import spark.implicits._
+    val e = intercept[Store.LoadError](
+      store.load(Seq(("not a date", 1L)).toDF("date", "id"), "bad", Map("date" -> "Date")))
+    assert(e.getMessage.contains("Error loading DataFrame 'bad'"), e.getMessage)
+    assert(!store.list().exists(_.name == "bad"))
+  }
+
+  test("keyed load of a computed input (a parquet scan) still clusters with a shuffle") {
+    // Guards VectorIndex's keyed load of computed cell assignments: one
+    // task over a computed input would run all of its compute serially.
+    val src = Files.createTempDirectory("graft_scan_").toString + "/src"
+    sampleDf().write.parquet(src)
+    val root = Files.createTempDirectory("graft_scanload_").toString
+    val store = new Store(spark, root)
+    val plans = writePlans(store.load(spark.read.parquet(src), "t",
+      Map("date" -> "Date", "id" -> "ID"), externalKey = "v1"))
+    assert(plans.size == 1, plans)
+    assert(plans.head.contains("Exchange hashpartitioning"), plans.head)
+    assert(filesPerDir(root, "t").values.forall(_ == 1), filesPerDir(root, "t"))
   }
 
   test("wire shim epoch-encodes naive timestamps as UTC regardless of session tz") {
