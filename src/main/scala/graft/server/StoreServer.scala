@@ -29,15 +29,15 @@ import graft.store.{FileStats, Store, Wire}
   *     cluster-scale access uses the Store/DataFrame API directly (the
   *     wire itself is the bottleneck, not the engine).
   *   - Per-request cost is set by fixed costs, not data work: a
-  *     client-sized GET checks its row cap from parquet footers (no
-  *     job) and streams as ONE Spark job ([[Wire.StreamChunkBytes]]
-  *     sizes the partitions); a client-sized upload is ONE Spark job
-  *     with one task — the JSON is decoded on the driver
-  *     ([[Wire.fromJsonRecords]]) and a keyed store write of
-  *     driver-resident rows needs no clustering shuffle; a list runs no
-  *     job at all. Replies go out with TCP_NODELAY (see the companion
-  *     object) — with Nagle on, a small reply waited ~40 ms on the
-  *     client's delayed ACK.
+  *     client-sized GET checks its row cap from parquet footers and
+  *     reads and encodes its files on the driver
+  *     ([[Wire.jsonRecordIterator]]), so it runs no Spark job; a
+  *     client-sized upload is ONE Spark job with one task — the JSON is
+  *     decoded on the driver ([[Wire.fromJsonRecords]]) and a keyed
+  *     store write of driver-resident rows needs no clustering shuffle;
+  *     a list runs no job at all. Replies go out with TCP_NODELAY (see
+  *     the companion object) — with Nagle on, a small reply waited
+  *     ~40 ms on the client's delayed ACK.
   *   - Every Spark job a request runs carries the description
   *     `store-server <METHOD> <path>`, so a trace can attribute it.
   *   - `Authorization` headers are accepted and ignored by default,
@@ -50,7 +50,8 @@ import graft.store.{FileStats, Store, Wire}
   *     shape, not an authenticator.
   *   - JSON in/out uses Spark's own shipped Jackson — no new deps.
   *
-  * Status mapping: validation errors → 400, `Store.GetError` → 404,
+  * Status mapping: validation errors and request bodies that are not
+  * JSON (or not the gzip they are labelled) → 400, `Store.GetError` → 404,
   * over-`maxGetRows` reads → 413, everything else → 500; all error
   * bodies are `{"error": "<msg>"}`.
   *
@@ -159,11 +160,20 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
   /** POST /dataframes/upload — body mirrors client.py:113-119:
     * `{dataframe: "<records json>", dataframe_name, columns_keys,
     * external_key, keep_last}`. The body is parsed once, straight from
-    * the request stream. A malformed payload or a bad key answers 400
-    * before any Spark job runs.
+    * the request stream. A body that is not JSON, a malformed payload or
+    * a bad key answers 400 before any Spark job runs.
     */
   private def upload(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(requestBody(ex))
+    val body =
+      try mapper.readTree(requestBody(ex))
+      catch {
+        // Both are IOExceptions, which handle() would answer 500; they
+        // say what the client sent, not that the server failed.
+        case e @ (_: com.fasterxml.jackson.core.JsonProcessingException |
+            _: java.util.zip.ZipException) =>
+          throw new IllegalArgumentException(
+            s"request body is not valid JSON: ${e.getClass.getSimpleName}: ${e.getMessage}", e)
+      }
     val records = Option(body.get("dataframe")).filterNot(_.isNull).map(_.asText())
       .getOrElse(throw new IllegalArgumentException("'dataframe' is required"))
     val name = Option(body.get("dataframe_name")).filterNot(_.isNull)
@@ -209,11 +219,13 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
     * count is unavailable (more footers than its budget) does a
     * `limit(cap+1).count()` probe job decide.
     *
-    * In-cap responses stream via `toLocalIterator` over
-    * [[Wire.toJsonRecords]]'s partitions, one job per partition: a
-    * client-sized frame is one partition, so the whole response is one
-    * Spark job. The driver holds one partition of JSON strings at a
-    * time, never the whole frame.
+    * In-cap responses stream from [[Wire.jsonRecordIterator]]. A
+    * client-sized read is read and encoded on the driver, one file at a
+    * time and one record at a time, with no Spark job; its file readers
+    * are closed when the reply ends, however it ends. A frame past one
+    * [[Wire.StreamChunkBytes]] chunk streams one job per chunk and holds
+    * one chunk of JSON strings at a time. The driver never holds the
+    * whole frame.
     */
   private def get(ex: HttpExchange, name: String): Unit = {
     val params = queryParams(ex)
@@ -229,6 +241,9 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
           "or narrow the request with external_key"))
       return
     }
+    // Planned before the headers, so a read that cannot start still
+    // answers 500. No file is open until the loop below reaches it.
+    val records = Wire.jsonRecordIterator(df)
     // Streaming starts here: headers are committed, so any mid-stream
     // failure can only truncate the body (the client's JSON parse fails
     // loudly) — it must NOT fall through to handle()'s error responder,
@@ -245,11 +260,10 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
       else ex.getResponseBody
     try {
       os.write('[')
-      val it = Wire.toJsonRecords(df).toLocalIterator()
       var first = true
-      while (it.hasNext) {
+      while (records.hasNext) {
         if (!first) os.write(',')
-        os.write(it.next().getBytes(UTF_8))
+        os.write(records.next().getBytes(UTF_8))
         first = false
       }
       os.write(']')
@@ -257,10 +271,17 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[store-server] GET $name stream aborted: ${e.getMessage}")
     } finally {
-      // close() flushes the chunked trailer and throws again on an
-      // aborted connection — swallowed here for the same reason as the
-      // write failure above: headers are committed, so escaping to
-      // handle()'s responder would attempt a second header-send.
+      // A client that hangs up mid-reply leaves a file reader open, and
+      // on the driver no task end closes it. Both closes are swallowed
+      // for the same reason as the write failure above: headers are
+      // committed, so escaping to handle()'s responder would attempt a
+      // second header-send. (os.close() flushes the chunked trailer and
+      // throws again on an aborted connection.)
+      try records.close()
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[store-server] GET $name: closing its readers failed: ${e.getMessage}")
+      }
       try os.close()
       catch { case scala.util.control.NonFatal(_) => () }
     }

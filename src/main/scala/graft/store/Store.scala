@@ -1549,11 +1549,27 @@ final class Store(
     * `withSizes` opts in. A store with millions of TABLES (not rows)
     * would want a real catalog service; that is out of scope per
     * SURVEY.md §2.1 and the tradeoff is intentional.
+    *
+    * A prefix confines the walk to its own path: every table it matches
+    * lies in the directory it names, so the walk descends from the root
+    * through the prefix's segments only, and lists nothing else. A
+    * prefix that is not a valid name (with or without one trailing "/")
+    * matches no table and lists nothing.
     */
   def list(prefix: Option[String] = None, withSizes: Boolean = false): Seq[TableInfo] = {
     if (!fs.exists(rootPath)) return Seq.empty
+    val prefixSegs: List[String] = prefix match {
+      case None => Nil
+      case Some(p) =>
+        try validateName(p.stripSuffix("/")).split("/").toList
+        catch { case _: IllegalArgumentException => return Seq.empty }
+    }
     val tables = Seq.newBuilder[TableInfo]
-    def walk(dir: Path, rel: List[String]): Unit = {
+    // `path` is what is left of the prefix's segments below `dir`: the
+    // walk enters only the child named by its head, and every child once
+    // it is empty. A directory on the way that is a table is handled as
+    // in the full walk, so the result is the full walk's.
+    def walk(dir: Path, rel: List[String], path: List[String]): Unit = {
       // A directory can vanish between its parent's listing and its own:
       // a table's first load has no `_meta.json` yet, so the walk enters
       // its `.staging_*` tree, which the load's committer and publish
@@ -1594,13 +1610,14 @@ final class Store(
         children.filter(_.isDirectory)
           // In-flight clone staging dirs are not tables yet.
           .filterNot(_.getPath.getName.contains(Store.TmpCloneInfix))
+          .filter(st => path.isEmpty || st.getPath.getName == path.head)
           .foreach { st =>
-            walk(st.getPath, st.getPath.getName :: rel)
+            walk(st.getPath, st.getPath.getName :: rel, path.drop(1))
           }
       }
     }
     try {
-      walk(rootPath, Nil)
+      walk(rootPath, Nil, prefixSegs)
     } catch {
       case e: Exception =>
         throw new Store.ListError(s"Error listing DataFrames: ${e.getMessage}", e)

@@ -174,11 +174,66 @@ class StoreServerSpec extends SparkSpec {
       val (ok, okJobs) = jobsDescribed("store-server GET /dataframes/my-test/small")(
         getCapped("/dataframes/my-test/small"))
       assert(ok.statusCode() == 200, ok.body())
-      assert(okJobs == 1, "an in-cap client-sized GET streams as one Spark job")
+      assert(okJobs == 0, "an in-cap client-sized GET is read on the driver, with no Spark job")
       assert(ok.body().startsWith("[") && ok.body().endsWith("]"), ok.body())
       assert((1L to 3L).forall(i => ok.body().contains(s""""id":$i""")), ok.body())
       assert(ok.body().count(_ == ',') >= 2, "3 records need 2+ separators")
     } finally capped.stop()
+  }
+
+  test("an upload body that is not JSON, or not the gzip it is labelled, answers 400") {
+    val upload = "store-server POST /dataframes/upload"
+    def send(body: String, gzipLabel: Boolean): HttpResponse[String] = {
+      val b = HttpRequest.newBuilder(URI.create(s"$base/dataframes/upload"))
+        .header("Content-Type", "application/json")
+      if (gzipLabel) b.header("Content-Encoding", "gzip")
+      http.send(b.POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+    }
+    val payload = """{"dataframe": "[{\"a\":1}]", "dataframe_name": "t-body"}"""
+    val (truncated, truncatedJobs) = jobsDescribed(upload)(send(payload.dropRight(1), false))
+    assert(truncated.statusCode() == 400, truncated.body())
+    assert(truncated.body().startsWith("""{"error":"""), truncated.body())
+    val (plain, plainJobs) = jobsDescribed(upload)(send(payload, true))
+    assert(plain.statusCode() == 400, plain.body())
+    assert(plain.body().startsWith("""{"error":"""), plain.body())
+    assert(truncatedJobs == 0 && plainJobs == 0, "a body that is not JSON must not run a Spark job")
+    assert(get("/dataframes/t-body").statusCode() == 404)
+  }
+
+  test("a GET whose client hangs up mid-reply closes its file readers; the server serves on") {
+    import org.apache.spark.sql.execution.datasources.LocalScanBridge
+    // About 15 MB of JSON: far more than the socket buffers, so the
+    // server is still writing, with a reader open, when the client goes.
+    store.load(spark.range(0, 100000).select(col("id"),
+      sha2(col("id").cast("string"), 256).as("h1"), sha2(col("id").cast("string"), 512).as("h2")),
+      "my-test/wide", externalKey = "v1")
+    val before = LocalScanBridge.openReaders
+    def await(cond: => Boolean): Boolean = {
+      val deadline = System.nanoTime() + 20000000000L
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
+      cond
+    }
+    val socket = new java.net.Socket("127.0.0.1", serverAndPort._2)
+    try {
+      socket.getOutputStream.write(
+        "GET /dataframes/my-test/wide HTTP/1.1\r\nHost: localhost\r\n\r\n".getBytes("UTF-8"))
+      socket.getOutputStream.flush()
+      val first = new Array[Byte](4096)
+      var got = 0
+      while (got < first.length) {
+        val n = socket.getInputStream.read(first, got, first.length - got)
+        assert(n > 0, "the reply ended early")
+        got += n
+      }
+      assert(new String(first, "UTF-8").startsWith("HTTP/1.1 200"))
+      assert(await(LocalScanBridge.openReaders > before), "the reply is being read from a file")
+    } finally socket.close()
+    assert(await(LocalScanBridge.openReaders == before), "the reply's reader was left open")
+    import spark.implicits._
+    store.load(Seq((1L, "a")).toDF("id", "v"), "my-test/after-hangup", externalKey = "v1")
+    val next = get("/dataframes/my-test/after-hangup")
+    assert(next.statusCode() == 200 && next.body() == """[{"id":1,"v":"a"}]""", next.body())
   }
 
   test("stop() ends the server's request threads") {

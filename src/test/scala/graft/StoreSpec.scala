@@ -178,6 +178,37 @@ class StoreSpec extends SparkSpec {
     assert(store.list(Some("a/")).find(_.name == "a/y").get.columnsKeys == Map("id" -> "ID"))
   }
 
+  test("a prefixed list descends only the prefix path and returns what the full walk returns") {
+    val dir = Files.createTempDirectory("graft_test_")
+    val store = new Store(spark, dir.toString)
+    store.load(sampleDf(), "c0/t", Map("id" -> "ID"), externalKey = "v1")
+    store.load(sampleDf(), "c0/t2/x", externalKey = "v1")
+    store.load(sampleDf(), "c0/t2/y/z")
+    store.load(sampleDf(), "c1/u")
+    store.load(sampleDf(), "c")
+    // A table on its first load: no _meta.json yet, a staging tree.
+    Files.createDirectories(dir.resolve("c0/first/.staging_0123/_temporary/0"))
+    // A clone in flight, and a stray _meta.json inside a table dir: the
+    // full walk lists neither.
+    Files.createDirectories(dir.resolve(s"c0/t2/x${Store.TmpCloneInfix}9/v"))
+    Files.writeString(dir.resolve(s"c0/t2/x${Store.TmpCloneInfix}9/${Store.MetaFile}"), "{}")
+    Files.createDirectories(dir.resolve("c0/t/x"))
+    Files.writeString(dir.resolve(s"c0/t/x/${Store.MetaFile}"), "{}")
+    // What the full walk gives a prefix: every table, then the
+    // segment-wise prefix match.
+    def fullWalk(p: String) = store.list().filter { t =>
+      t.name == p || t.name.startsWith(if (p.endsWith("/")) p else p + "/")
+    }
+    val expected = Map("" -> Nil, "c0" -> Seq("c0/t", "c0/t2/x", "c0/t2/y/z"),
+      "c0/" -> Seq("c0/t", "c0/t2/x", "c0/t2/y/z"), "c0/t" -> Seq("c0/t"), "c0/t/x" -> Nil,
+      "c" -> Seq("c"), "missing" -> Nil, "c0/t2" -> Seq("c0/t2/x", "c0/t2/y/z"),
+      "c0/first" -> Nil, "../c0" -> Nil, "c0//t" -> Nil)
+    expected.foreach { case (p, names) =>
+      assert(store.list(Some(p)) == fullWalk(p), s"prefix '$p'")
+      assert(store.list(Some(p)).map(_.name) == names, s"prefix '$p'")
+    }
+  }
+
   test("validation rejects bad inputs with reference-shaped errors") {
     val store = freshStore()
     val df = sampleDf()
