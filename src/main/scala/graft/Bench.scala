@@ -17,9 +17,9 @@ import org.apache.spark.sql.SparkSession
   * is reported in `failures` (and its slot in `queries` is -1) instead
   * of contributing a misleadingly tiny timing; `value` sums successful
   * medians only. `cpus`/`shuffle_partitions` are recorded so cross-round
-  * comparisons are apples-to-apples; the default local[32] matches the
-  * driver harness and the recorded BENCH_r01 (override via
-  * SPARK_GRAFT_CPUS).
+  * comparisons are apples-to-apples; the default is the host's core
+  * count (override via SPARK_GRAFT_CPUS). Rounds up to r20 recorded
+  * local[32] on a 32-core host.
   */
 object Bench {
 
@@ -61,21 +61,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // The bench measures the PRODUCTION single-JVM conf
-    // ([[Graft.singleJvmScaleConfs]] — what a local deployment gets from
-    // tuneForScale) since r14; SPARK_GRAFT_STOCK_CONF=1 restores stock
-    // Spark defaults for A/B runs. The r14 A/B at sf0.1 measured the
-    // tuned conf registry-wide no-regression before it became default.
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-    if (sys.env.getOrElse("SPARK_GRAFT_STOCK_CONF", "0") != "1")
-      Graft.singleJvmScaleConfs.foreach { case (k, v) => builder = builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The bench measures the PRODUCTION single-JVM session
+    // ([[Graft.localSession]], which carries [[Graft.singleJvmScaleConfs]])
+    // since r14. The r14 A/B at sf0.1 measured the tuned conf
+    // registry-wide no-regression before it became default.
+    val spark = Graft.localSession("graft-bench")
+    val cpus = spark.sparkContext.defaultParallelism
     // Launch gate (r19, promoting the fixed-delta campaign's watcher
     // into the standing round-close bench — VERDICT r18 #3): rounds
     // 14–18 each burned a NOTES section re-arguing whether a raw drift
@@ -142,7 +133,7 @@ object Bench {
     // normal. Record achievable streaming bandwidth (single-thread and
     // at the executor thread count) next to it so "host memory weather"
     // is a fact of every BENCH artifact. ~3 s once per run.
-    val (bw1, bwN) = graft.tools.MemBandwidthProbe.probe(threads = cpus.toInt)
+    val (bw1, bwN) = graft.tools.MemBandwidthProbe.probe(threads = cpus)
     val bwJson = f""""calibration_bw":{"t1":$bw1%.2f,"t$cpus":$bwN%.2f}"""
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     def median(xs: Seq[Double]): Double = {
@@ -214,18 +205,15 @@ object Bench {
       s""""calibration":{"query":"$calibrationName",""" +
         s""""samples":${calibration.mkString("[", ",", "]")},""" +
         s""""median":${if (calibration.isEmpty) -1.0 else median(calibration)}}"""
-    // Conf provenance: r9–r13 artifacts ran stock codegen; r14+ default
-    // to the tuned production conf — cross-round per-query comparisons
-    // must read this field (hashAgg-heavy walls changed REGIME, not
-    // just host weather).
-    val confTag =
-      if (sys.env.getOrElse("SPARK_GRAFT_STOCK_CONF", "0") == "1") "stock"
-      else "tuned_single_jvm"
+    // Conf provenance: r9–r13 artifacts ran stock codegen ("stock");
+    // r14+ run the tuned production conf — cross-round per-query
+    // comparisons must read this field (hashAgg-heavy walls changed
+    // REGIME, not just host weather).
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${timeMap(median)},""" +
         s""""queries_min":${timeMap(_.min)},"queries_max":${timeMap(_.max)},""" +
         s""""reps":$reps,"failures":$failures,"cpus":$cpus,"shuffle_partitions":$cpus,""" +
-        s""""conf":"$confTag","warmup_sec":$warmupSec,$calJson,$bwJson,$weatherJson,""" +
+        s""""conf":"tuned_single_jvm","warmup_sec":$warmupSec,$calJson,$bwJson,$weatherJson,""" +
         s"""$gateJson,$passesJson,"sf":"$sfDir"}"""
     // stderr, NOT stdout: the driver keeps a ~2000-char stdout tail and
     // parses its last line as JSON — a ~7 KB per-query map on stdout
@@ -262,7 +250,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","stat":"median",""" +
         s""""n_queries":${results.size},"reps":$reps,"failures":$failures,""" +
         s""""slowest":$slowest,$calJson,$bwJson,$weatherJson,$gateJson,""" +
-        s""""conf":"$confTag","per_query_file":"$outFile","sf":"$sfDir"}""")
+        s""""conf":"tuned_single_jvm","per_query_file":"$outFile","sf":"$sfDir"}""")
     if (results.exists(!_._3)) sys.exit(1)
   }
 }

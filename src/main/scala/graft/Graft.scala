@@ -9,9 +9,12 @@ import graft.store.Store
   * `Graft` per store root, use the returned [[graft.store.Store]] for
   * load/get/list, the `ops`/`operators`/`streaming` packages for
   * computation, and [[registerSql]] to make the custom expressions
-  * callable from `spark.sql`.
+  * callable from `spark.sql`. [[Graft.localSession]] builds the
+  * single-JVM session every main, tool and test here runs on; a session
+  * built elsewhere gets the same scale confs from [[tuneForScale]].
   *
   * {{{
+  * val spark = Graft.localSession("my-app")
   * val g = Graft(spark, "/data/warehouse")
   * g.store.load(df, "proj/orders", Map("o_orderdate" -> Store.KeyDate))
   * val back = g.store.get("proj/orders", useLast = true)
@@ -88,8 +91,36 @@ object Graft {
     "spark.sql.files.openCostInBytes" -> "65536",
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192")
 
-  /** Apply [[singleJvmScaleConfs]] to an existing session (all entries
-    * are runtime SQL confs — no session rebuild needed).
+  /** The local session every entry point runs on: `local[cpus]` with
+    * `cpus` shuffle partitions, UTC session time, no UI, the
+    * [[graft.hadoop.FastLocalFileSystem]] `file:` scheme, every entry of
+    * [[singleJvmScaleConfs]] and then `conf`, all set at build time, and
+    * WARN logging. `cpus` defaults to `SPARK_GRAFT_CPUS`, else the host's
+    * available processors; pass it only where a recorded result depends
+    * on the partition count.
+    */
+  def localSession(
+      appName: String,
+      cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors),
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val base = Map(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.hadoop.fs.file.impl" -> classOf[graft.hadoop.FastLocalFileSystem].getName)
+    val spark = (base ++ singleJvmScaleConfs ++ conf)
+      .foldLeft(SparkSession.builder().master(s"local[$cpus]").appName(appName)) {
+        case (b, (k, v)) => b.config(k, v)
+      }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Apply [[singleJvmScaleConfs]] to a session built elsewhere (all
+    * entries are runtime SQL confs — no session rebuild needed).
+    * [[localSession]] already applies them.
     */
   def tuneForScale(spark: SparkSession): SparkSession = {
     singleJvmScaleConfs.foreach { case (k, v) => spark.conf.set(k, v) }

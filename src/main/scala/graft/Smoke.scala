@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 gate: builds a session,
   * runs [[SparkEntry.entry]], prints the result. Also probes the Store's
   * validation surface (bad key type / bad name / missing table) so the
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession("graft-smoke")
 
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
@@ -24,8 +15,7 @@ object Smoke {
     rows.take(5).foreach(r => println(s"[smoke] $r"))
 
     // Probe the store's validation error surface.
-    val store = new graft.store.Store(
-      spark, java.nio.file.Files.createTempDirectory("graft_smoke_").toString)
+    val store = new graft.store.Store(spark, TempDirs.create("graft_smoke_"))
     val li = Tables.read(spark, "/root/testdata/sf0.001", "lineitem")
     def expectFail(label: String)(f: => Any): Unit =
       try { f; println(s"[smoke] $label: NO ERROR (unexpected)") }
@@ -45,11 +35,11 @@ object Smoke {
 
     // Streaming surface: tumbling-window counts from a file-source stream
     // drained into the memory sink.
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_smoke_stream_")
+    val streamDir = TempDirs.create("graft_smoke_stream_")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val stream = graft.streaming.EventStreams.readEvents(spark, streamDir.toString)
+      java.nio.file.Paths.get(streamDir, "events.parquet"))
+    val stream = graft.streaming.EventStreams.readEvents(spark, streamDir)
     val windowed = graft.streaming.EventStreams.runToMemory(
       spark, graft.streaming.EventStreams.tumblingCounts(stream, "1 hour", "10 minutes"),
       "smoke_tumble")

@@ -9,9 +9,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * fork-a-`chmod`-subprocess-per-path `setPermission` fallback Hadoop
   * uses when its native library is absent (`NativeCodeLoader` warning at
   * startup). A partitioned write of N directories otherwise costs ~2N
-  * process forks — profiled at ~70% of the store write path (see
-  * `graft.tools.StoreProfile`): a 365-dir date-partitioned load dropped
-  * 5.5s → sub-second with this shim.
+  * process forks — profiled at ~70% of the store write path (the
+  * round-2 addendum in PLANS_r2.md): a 365-dir date-partitioned load
+  * dropped 5.5s → sub-second with this shim.
   *
   * Extends [[LocalFileSystem]] (wrapping the chmod-free raw fs), NOT
   * [[RawLocalFileSystem]] directly: Hadoop's `FileSystem.getLocal`

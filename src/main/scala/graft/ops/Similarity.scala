@@ -1493,7 +1493,7 @@ object Similarity {
       else e.limit(math.min(maxFitRows, Int.MaxValue.toLong).toInt)
     val km = new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
       .setFeaturesCol("features").setPredictionCol("cell")
-    val model = km.fit(fitInput)
+    val model = km.fit(nonEmptyPartitions(fitInput))
     val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray) }.toSeq
     // Hard assignment stays on the ML transform at EVERY nlist: it is
@@ -1507,6 +1507,24 @@ object Similarity {
     // was HOF-based to begin with and the FLOP cut is pure win).
     val assigned = model.transform(e).select(col("vec_id"), col("nv"), col("cell"))
     (assigned, centroids, fitInput.select("nv"))
+  }
+
+  /** `df` without its empty partitions, rows and order kept. KMeans
+    * seeds its init by partition index, and a file split that holds no
+    * row group still takes an index: the single-JVM open cost
+    * (`files.openCostInBytes` in [[graft.Graft.singleJvmScaleConfs]])
+    * cuts a file into more splits than it has row groups, and how many
+    * more moves with the core count. So the same rows fit different
+    * centroids on a 4-core and a 32-core host unless the empty splits
+    * are dropped. Costs one job that reads at most the first row of
+    * each partition.
+    */
+  private def nonEmptyPartitions(df: DataFrame): DataFrame = {
+    val rdd = df.rdd
+    val keep = rdd.mapPartitionsWithIndex((i, it) => Iterator(i -> it.hasNext))
+      .collect().collect { case (i, true) => i }.toSet
+    df.sparkSession.createDataFrame(
+      org.apache.spark.rdd.PartitionPruningRDD.create(rdd, keep), df.schema)
   }
 
   /** SemDeDup (semantic dedup, the LAION/DataComp-scale pipeline op):
@@ -1717,7 +1735,7 @@ object Similarity {
   /** Default group-probe count for [[probeAssignHier]]: ⌈√g⌉ capped at
     * 4, floor 2. The cap fixes the ASYMPTOTE: with gp = ⌈√g⌉ the
     * per-row cost is g + √g·(nlist/g) ≈ nlist^0.75, which is n^1.75
-    * total under corpus-adaptive nlist — PairStageProbe measured
+    * total under corpus-adaptive nlist — NOTES_r10.md's stage probe measured
     * exactly that law (soft-assign 40.7 → 164.9 s per 2× data, 4.05×,
     * while every other stage of the cell-pruned pair shape grew
     * ≤ 1.6×). The r10 FIXED cap of 4 made the two-level cost 5·√nlist

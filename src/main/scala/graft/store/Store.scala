@@ -1554,11 +1554,13 @@ final class Store(
     * lies in the directory it names, so the walk descends from the root
     * through the prefix's segments only, and lists nothing else. A
     * prefix that is not a valid name (with or without one trailing "/")
-    * matches no table and lists nothing.
+    * matches no table and lists nothing. An empty prefix is no prefix:
+    * it matches every table, as the reference's `startsWith("")` does.
     */
   def list(prefix: Option[String] = None, withSizes: Boolean = false): Seq[TableInfo] = {
     if (!fs.exists(rootPath)) return Seq.empty
-    val prefixSegs: List[String] = prefix match {
+    val namePrefix = prefix.filter(_.nonEmpty)
+    val prefixSegs: List[String] = namePrefix match {
       case None => Nil
       case Some(p) =>
         try validateName(p.stripSuffix("/")).split("/").toList
@@ -1590,7 +1592,7 @@ final class Store(
         // string prefixes). A prefix ending in "/" matches children only.
         def segMatch(p: String): Boolean =
           name == p || name.startsWith(if (p.endsWith("/")) p else p + "/")
-        if (prefix.forall(segMatch)) {
+        if (namePrefix.forall(segMatch)) {
           // File stats are opt-in: recursing every data file turns a
           // cheap metadata listing into O(total files) of LIST calls on
           // a large store.

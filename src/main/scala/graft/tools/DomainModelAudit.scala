@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextOps
@@ -26,14 +25,7 @@ object DomainModelAudit {
     val labelCol = if (args.length > 1) args(1) else "lang"
     val dim = if (args.length > 2) args(2).toInt else 512
     val iters = if (args.length > 3) args(3).toInt else 50
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Graft.localSession("graft-domain-model-audit", cpus = 8)
     val d = graft.Tables.read(spark, sfDir, "documents")
     val train = d.where(pmod(col("doc_id"), lit(4)) =!= 1)
     val test = d.where(pmod(col("doc_id"), lit(4)) === 1)

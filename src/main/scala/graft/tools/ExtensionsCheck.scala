@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -23,16 +20,9 @@ import graft.store.Store
   */
 object ExtensionsCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-check")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.localSession("graft-extensions-check", conf = Map(
+      "spark.sql.extensions" -> "org.apache.spark.sql.graft.GraftExtensions",
+      "spark.sql.adaptive.enabled" -> "false"))
     try {
       val d = spark.sql("SELECT vec_dot(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
         .head().getDouble(0)
@@ -42,7 +32,7 @@ object ExtensionsCheck {
       require(sh == 2, s"word_shingles returned $sh")
 
       import spark.implicits._
-      val store = new Store(spark, Files.createTempDirectory("graft_ext_").toString)
+      val store = new Store(spark, graft.TempDirs.create("graft_ext_"))
       store.load((0L until 10000L).map(i => (i, s"r$i")).toDF("id", "payload"),
         "t", Map("id" -> Store.KeyId), externalKey = "v1")
       val q = store.getPartitioned("t")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB decomposition of a registered query (r19 optimization
   * tooling): runs the named queries once under the bench session config
@@ -15,17 +14,7 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-    if (sys.env.getOrElse("SPARK_GRAFT_STOCK_CONF", "0") != "1")
-      graft.Graft.singleJvmScaleConfs.foreach { case (k, v) =>
-        builder = builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.localSession("graft-job-profile")
     graft.Bench.warmup(spark, sfDir)
 
     final case class JobRec(id: Int, start: Long, var end: Long = -1L,

@@ -4,7 +4,7 @@ package graft.tools
   *
   * The r11 qn63 investigation eliminated every in-JVM suspect for the
   * bimodal 2M walls (33–56 s vs 483–781 s on identical committed code):
-  * the work is bit-identical across JVMs (CellBalanceProbe), the hot
+  * the work is bit-identical across JVMs (NOTES_r11.md item 7), the hot
   * generated methods are tiny (143–233 bytecodes — nothing in a full
   * `-XX:+PrintCompilation` run exceeds 8000, so the huge-method limit
   * is never in play) and reach C2/tier-4 within ~150 ms of first

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextOps
@@ -18,14 +17,7 @@ object QualityModelAudit {
     val sfDir = args(0)
     val dim = if (args.length > 1) args(1).toInt else 512
     val iters = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Graft.localSession("graft-quality-model-audit", cpus = 8)
     val d = graft.Tables.read(spark, sfDir, "documents")
     val t0 = System.nanoTime()
     val model = TextOps.trainQualityModel(

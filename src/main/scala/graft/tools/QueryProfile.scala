@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query profiling harness: runs the named registered queries
   * (`graft.SparkEntry.queries`) rep times each under the bench's exact
   * session config and prints every sample — the bisection tool for
@@ -14,23 +12,10 @@ import org.apache.spark.sql.SparkSession
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "5").toInt
-    // The bench's EXACT session config incl. the tuned single-JVM confs
-    // (Bench applies Graft.singleJvmScaleConfs unless
-    // SPARK_GRAFT_STOCK_CONF=1 — this tool was missing them, so profile
-    // numbers ran a DIFFERENT hash-agg regime than the artifact it
-    // bisects; r19 fix).
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-    if (sys.env.getOrElse("SPARK_GRAFT_STOCK_CONF", "0") != "1")
-      graft.Graft.singleJvmScaleConfs.foreach { case (k, v) =>
-        builder = builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The bench's own session, so profile numbers run the same hash-agg
+    // regime as the artifact they bisect.
+    val spark = graft.Graft.localSession("graft-query-profile")
     val names =
       if (args.isEmpty || args.sameElements(Array("all"))) graft.SparkEntry.queries.keys.toSeq
       else args.toSeq

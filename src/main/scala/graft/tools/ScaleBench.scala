@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity}
@@ -94,44 +94,12 @@ object ScaleBench {
     // that happens to run first.
     val warmN = sys.env.getOrElse("SPARK_GRAFT_SCALE_WARMUP", "0").toLong
     val scales = (if (warmN > 0) Seq(warmN) else Seq.empty) ++ timedScales
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      // The bounded-heap aggregates (TopKByScoreAgg) run through
-      // ObjectHashAggregateExec, whose sort-based fallback kicks in at
-      // 128 distinct keys per partition — at the upper scale points
-      // that needlessly external-sorts 10⁸-row candidate streams whose
-      // hash maps (≤ ~100k tiny heap states) fit memory trivially, and
-      // the per-op spills stack up to a single-node disk blowout (the
-      // r9 500k-point failure; on a real cluster the same spill spreads
-      // over hundreds of executor disks). Keep hash aggregation until
-      // maps are genuinely large.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      // r13: the generated two-level fast hash map is a double loss for
-      // the high-cardinality candidate-pair aggregations this suite
-      // measures: its speculative branches seeded the unstable_if →
-      // deopt-without-OSR-rescue lottery behind qn63's bimodal 2M walls
-      // (SCALEBENCH_r13.json / NOTES_r13.md — slow reps ran the loop
-      // INTERPRETED to partition end), and at ~800k groups every probe
-      // paid the fast-map miss before reaching the real map anyway:
-      // twolevel-off measured 37–59 s vs 70–92 s fast-mode / 473–652 s
-      // slow-mode walls, 4/4 reps stable. SPARK_GRAFT_TWOLEVEL=1
-      // restores the stock codegen (e.g. to reproduce the pathology).
-      .config("spark.sql.codegen.aggregate.map.twolevel.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_TWOLEVEL", "0") == "1").toString)
-      // r15 deployment conf (Graft.singleJvmScaleConfs): bucketed state
-      // scans report their stored sort, so the delta-ingest SMJ streams
-      // the state side (no exchange AND no local sort). Safe: Spark
-      // only claims the order for one-file-per-bucket tables, which
-      // BucketedState writes guarantee. SPARK_GRAFT_BUCKETSORT=0
-      // restores the stock re-sort to reproduce the before shape.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        (sys.env.getOrElse("SPARK_GRAFT_BUCKETSORT", "1") == "1").toString)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // The production single-JVM session: its scale confs keep hash
+    // aggregation for the bounded-heap candidate streams, turn the
+    // two-level fast map off (the r13 qn63 deopt lottery,
+    // SCALEBENCH_r13.json / NOTES_r13.md) and let bucketed state scans
+    // report their stored sort (see Graft.singleJvmScaleConfs).
+    val spark = graft.Graft.localSession("graft-scalebench")
 
     // In-JVM bandwidth time series (r13, the qn63 protocol): point-level
     // probes run AFTER the ops, so a transient co-tenant squeeze that

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LocalScanBridge, LogicalRelation}
@@ -18,7 +16,7 @@ import graft.store.{Store, Wire}
 class LocalScanSpec extends SparkSpec {
 
   private def freshStore(): (Store, String) = {
-    val root = Files.createTempDirectory("graft_scan_").toString
+    val root = TempDirs.create("graft_scan_")
     (new Store(spark, root), root)
   }
 
@@ -114,8 +112,10 @@ class LocalScanSpec extends SparkSpec {
     // Small row groups and a small open cost: the large file spans many
     // row groups and is cut into several splits, which the scan orders by
     // length among the other files' splits.
+    val openCost = "spark.sql.files.openCostInBytes"
+    val prevOpenCost = spark.conf.get(openCost)
     spark.conf.set("parquet.block.size", "65536")
-    spark.conf.set("spark.sql.files.openCostInBytes", "65536")
+    spark.conf.set(openCost, "65536")
     try {
       val wide = spark.range(0, 20000).select(col("id"),
         sha2(col("id").cast("string"), 256).as("h1"), sha2(col("id").cast("string"), 384).as("h2"))
@@ -133,7 +133,8 @@ class LocalScanSpec extends SparkSpec {
       assert(assertSameRecords(all, "split all versions").size == 20110)
     } finally {
       spark.conf.unset("parquet.block.size")
-      spark.conf.unset("spark.sql.files.openCostInBytes")
+      // Restore, not unset: the session starts with its own open cost.
+      spark.conf.set(openCost, prevOpenCost)
     }
     // A version holding only a 0-row file.
     store.load(frame(0, 10), "empty", externalKey = "v1")

@@ -298,7 +298,7 @@ class OpsSpec extends SparkSpec {
         .select("doc_id").orderBy("doc_id").collect().map(_.getLong(0)).toSeq
     val baseline = run() // localCheckpoint default (no checkpoint dir)
     assert(baseline.nonEmpty)
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val ckptDir = TempDirs.create("graft_ckpt_")
     spark.sparkContext.setCheckpointDir(ckptDir)
     try {
       assert(run() == baseline)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.SkewTools
@@ -15,7 +13,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 class ScaleSpec extends SparkSpec {
 
   test("IdRangePruningRule prunes ID-range partitions from user predicates") {
-    val store = new Store(spark, Files.createTempDirectory("graft_rule_").toString)
+    val store = new Store(spark, TempDirs.create("graft_rule_"))
     import spark.implicits._
     val df = (0L until 10000L).map(i => (i, s"row$i")).toDF("id", "payload")
     store.load(df, "t", Map("id" -> Store.KeyId), externalKey = "v1")
@@ -59,7 +57,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("DatePartitionPruningRule prunes date dirs from natural data-column predicates") {
-    val store = new Store(spark, Files.createTempDirectory("graft_drule_").toString)
+    val store = new Store(spark, TempDirs.create("graft_drule_"))
     import spark.implicits._
     val df = (0 until 1000).map(i =>
       (i.toLong, java.sql.Date.valueOf(f"2024-01-${i % 10 + 1}%02d"), s"r$i"))
@@ -103,7 +101,7 @@ class ScaleSpec extends SparkSpec {
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val g = Graft(spark, Files.createTempDirectory("graft_qs06_").toString)
+      val g = Graft(spark, TempDirs.create("graft_qs06_"))
         .installPruningRule()
       val orders = Tables.read(spark, sf("sf0.001"), "orders")
         .where(year(col("o_orderdate")) === 1997)
@@ -133,7 +131,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("pruning rule refuses to bind through aliases (no wrong pruning)") {
-    val store = new Store(spark, Files.createTempDirectory("graft_rule2_").toString)
+    val store = new Store(spark, TempDirs.create("graft_rule2_"))
     import spark.implicits._
     // v = id + 5000: projecting v AS "id" next to __p_id must not let the
     // rule pair v's values with id's partition labels — the derived
@@ -211,7 +209,7 @@ class ScaleSpec extends SparkSpec {
   test("getMerged resolves a 6-delta chain in ONE aggregate exchange") {
     import spark.implicits._
     val store = new graft.store.Store(spark,
-      java.nio.file.Files.createTempDirectory("graft_scale_mrg_").toString)
+      TempDirs.create("graft_scale_mrg_"))
     store.load((0L until 200L).map(i => (i, 0L)).toDF("k", "v"), "t", externalKey = "va")
     (1 to 6).foreach { i =>
       store.merge((0L until 50L).map(j => (j * i % 200L, i.toLong)).distinct.toDF("k", "v"),

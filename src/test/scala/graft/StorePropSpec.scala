@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.store.Store
@@ -40,7 +38,7 @@ object StorePropSpec extends Properties("Store") {
   }
 
   private def freshStore() =
-    new Store(spark, Files.createTempDirectory("graft_prop_").toString)
+    new Store(spark, TempDirs.create("graft_prop_"))
 
   private def canon(df: org.apache.spark.sql.DataFrame) =
     df.select(col("id"), col("date"), col("value"), col("tag"))

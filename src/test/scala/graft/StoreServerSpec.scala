@@ -17,7 +17,7 @@ import graft.store.Store
 class StoreServerSpec extends SparkSpec {
 
   private lazy val store =
-    new Store(spark, Files.createTempDirectory("graft_http_").toString)
+    new Store(spark, TempDirs.create("graft_http_"))
   private lazy val serverAndPort: (StoreServer, Int) = {
     val s = new StoreServer(spark, store)
     val p = s.start()
@@ -107,6 +107,14 @@ class StoreServerSpec extends SparkSpec {
     assert(r.statusCode() == 200)
     assert(r.body().contains("\"my-test/test1\"") && r.body().contains("\"dataframes\""))
     assert(r.body().contains("\"columns_keys\":{\"date\":\"Date\",\"id\":\"ID\"}"))
+  }
+
+  test("GET /dataframes?prefix= with an empty prefix lists every table") {
+    val all = get("/dataframes")
+    val r = get("/dataframes?prefix=")
+    assert(r.statusCode() == 200 && all.statusCode() == 200)
+    assert(r.body().contains("\"my-test/test1\""), r.body())
+    assert(r.body() == all.body())
   }
 
   test("errors come back as status + {'error': ...} bodies (client.py:132-137)") {
@@ -334,7 +342,7 @@ class StoreServerSpec extends SparkSpec {
       else new java.io.File(sys.props("user.dir"), "clients/python").getAbsolutePath
     }
     assume(new java.io.File(clientDir, "pandas_db_client.py").isFile)
-    val script = Files.createTempFile("graft_pyclient_", ".py")
+    val script = java.nio.file.Paths.get(TempDirs.create("graft_pyclient_"), "client_check.py")
     Files.writeString(script,
       """import sys
         |sys.path.insert(0, sys.argv[1])

@@ -15,7 +15,7 @@ import graft.store.{Store, Wire}
 class StoreSpec extends SparkSpec {
 
   private def freshStore(width: Long = 1000L): Store =
-    new Store(spark, Files.createTempDirectory("graft_test_").toString, idBucketWidth = width)
+    new Store(spark, TempDirs.create("graft_test_"), idBucketWidth = width)
 
   private def sampleDf() = {
     import spark.implicits._
@@ -179,7 +179,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("a prefixed list descends only the prefix path and returns what the full walk returns") {
-    val dir = Files.createTempDirectory("graft_test_")
+    val dir = java.nio.file.Paths.get(TempDirs.create("graft_test_"))
     val store = new Store(spark, dir.toString)
     store.load(sampleDf(), "c0/t", Map("id" -> "ID"), externalKey = "v1")
     store.load(sampleDf(), "c0/t2/x", externalKey = "v1")
@@ -195,11 +195,12 @@ class StoreSpec extends SparkSpec {
     Files.createDirectories(dir.resolve("c0/t/x"))
     Files.writeString(dir.resolve(s"c0/t/x/${Store.MetaFile}"), "{}")
     // What the full walk gives a prefix: every table, then the
-    // segment-wise prefix match.
+    // segment-wise prefix match. An empty prefix is no prefix.
     def fullWalk(p: String) = store.list().filter { t =>
-      t.name == p || t.name.startsWith(if (p.endsWith("/")) p else p + "/")
+      p.isEmpty || t.name == p || t.name.startsWith(if (p.endsWith("/")) p else p + "/")
     }
-    val expected = Map("" -> Nil, "c0" -> Seq("c0/t", "c0/t2/x", "c0/t2/y/z"),
+    val expected = Map("" -> Seq("c", "c0/t", "c0/t2/x", "c0/t2/y/z", "c1/u"),
+      "c0" -> Seq("c0/t", "c0/t2/x", "c0/t2/y/z"),
       "c0/" -> Seq("c0/t", "c0/t2/x", "c0/t2/y/z"), "c0/t" -> Seq("c0/t"), "c0/t/x" -> Nil,
       "c" -> Seq("c"), "missing" -> Nil, "c0/t2" -> Seq("c0/t2/x", "c0/t2/y/z"),
       "c0/first" -> Nil, "../c0" -> Nil, "c0//t" -> Nil)
@@ -220,7 +221,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("list survives directories vanishing mid-walk (a concurrent first load's staging tree)") {
-    val dir = Files.createTempDirectory("graft_test_")
+    val dir = java.nio.file.Paths.get(TempDirs.create("graft_test_"))
     val store = new Store(spark, dir.toString)
     store.load(sampleDf(), "a/t", externalKey = "v1")
     // A table whose first load is in flight has no _meta.json, so list
@@ -299,7 +300,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("keyed load of driver-resident rows writes without a shuffle, one file per dir") {
-    val root = Files.createTempDirectory("graft_local_").toString
+    val root = TempDirs.create("graft_local_")
     val store = new Store(spark, root)
     val plans = writePlans(
       store.load(sampleDf(), "t", Map("date" -> "Date", "id" -> "ID"), externalKey = "v1"))
@@ -322,9 +323,9 @@ class StoreSpec extends SparkSpec {
   test("keyed load of a computed input (a parquet scan) still clusters with a shuffle") {
     // Guards VectorIndex's keyed load of computed cell assignments: one
     // task over a computed input would run all of its compute serially.
-    val src = Files.createTempDirectory("graft_scan_").toString + "/src"
+    val src = TempDirs.create("graft_scan_") + "/src"
     sampleDf().write.parquet(src)
-    val root = Files.createTempDirectory("graft_scanload_").toString
+    val root = TempDirs.create("graft_scanload_")
     val store = new Store(spark, root)
     val plans = writePlans(store.load(spark.read.parquet(src), "t",
       Map("date" -> "Date", "id" -> "ID"), externalKey = "v1"))
@@ -352,7 +353,7 @@ class StoreSpec extends SparkSpec {
   test("csv.gz export/import compat path (README.md:20-21 at-rest shape)") {
     val store = freshStore()
     store.load(sampleDf(), "t", externalKey = "v1")
-    val out = Files.createTempDirectory("graft_csv_").toString
+    val out = TempDirs.create("graft_csv_")
     store.exportCsvGz("t", out, useLast = true, maxRecords = 2)
     val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv.gz"))
     assert(files.nonEmpty)
@@ -370,7 +371,7 @@ class StoreSpec extends SparkSpec {
       (3L, Some(-0.25), "c", Some(java.sql.Timestamp.valueOf("1999-12-31 23:59:59"))))
       .toDF("id", "v", "tag", "ts")
     store.load(df, "t_orc", externalKey = "v1")
-    val out = Files.createTempDirectory("graft_orc_t_").toString
+    val out = TempDirs.create("graft_orc_t_")
     store.exportOrc("t_orc", out, useLast = true, maxRecords = 1)
     val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".orc"))
     assert(files.length >= 3, "maxRecords=1 should chunk into one file per row")
@@ -480,7 +481,7 @@ class StoreSpec extends SparkSpec {
     import scala.concurrent.duration._
     import spark.implicits._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val root = Files.createTempDirectory("graft_conc_").toString
+    val root = TempDirs.create("graft_conc_")
     val store = new Store(spark, root)
     val a = (0L until 2000L).map(i => (i, "a")).toDF("id", "src")
     val b = (0L until 3000L).map(i => (i, "b")).toDF("id", "src")
@@ -558,7 +559,7 @@ class StoreSpec extends SparkSpec {
 
   test("compact lease excludes a second concurrent compactor, then releases") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_lease_").toString
+    val root = TempDirs.create("graft_lease_")
     val store = new Store(spark, root)
     val rival = new Store(spark, root)
     store.load((1L to 50L).map(i => (i, s"r$i")).toDF("id", "s"), "t", externalKey = "v1")
@@ -590,7 +591,7 @@ class StoreSpec extends SparkSpec {
 
   test("accumulate read builds its relation from schema sidecars, zero footer reads") {
     import spark.implicits._
-    val rootDir = Files.createTempDirectory("graft_test_").toString
+    val rootDir = TempDirs.create("graft_test_")
     val store = new Store(spark, rootDir)
     store.load(Seq((1L, "a"), (2L, "b")).toDF("id", "tag"), "t", externalKey = "v1")
     store.load(Seq((3L, "c", 1.5)).toDF("id", "tag", "score"), "t", externalKey = "v2")
@@ -832,7 +833,7 @@ class StoreSpec extends SparkSpec {
 
   test("stale compact lease is stolen; a fresh one excludes and survives the loser") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_lease_").toString
+    val root = TempDirs.create("graft_lease_")
     val store = new Store(spark, root)
     store.load(Seq((1L, 1.0)).toDF("k", "v"), "t", externalKey = "v1")
     val lease = new org.apache.hadoop.fs.Path(
@@ -901,7 +902,7 @@ class StoreSpec extends SparkSpec {
 
   test("clone is crash-safe: stale staging swept + invisible, atomic publish, reserved marker") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_test_").toString
+    val root = TempDirs.create("graft_test_")
     val store = new Store(spark, root)
     store.load(Seq((1L, "a")).toDF("k", "s"), "t", externalKey = "v1")
     // Simulate a crashed earlier clone: a partial staging sibling holding

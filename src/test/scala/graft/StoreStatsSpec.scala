@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -16,7 +14,7 @@ import graft.store.{FileStats, Store}
 class StoreStatsSpec extends SparkSpec {
 
   private def freshStore(): (Store, String) = {
-    val dir = Files.createTempDirectory("graft_stats_").toString
+    val dir = TempDirs.create("graft_stats_")
     (new Store(spark, dir), dir)
   }
 
@@ -102,7 +100,7 @@ class StoreStatsSpec extends SparkSpec {
 
   test("stats-disabled parquet (foreign writer) records no range — never skipped") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_nostats_").toString
+    val dir = TempDirs.create("graft_nostats_")
     // parquet-mr honors this write option: populated row groups get an
     // EMPTY Statistics object — indistinguishable from a 0-value group by
     // isEmpty alone. Such files must read as range-unknown (always

@@ -364,9 +364,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed file-sink query resumes exactly-once across restarts") {
-    val src = java.nio.file.Files.createTempDirectory("graft_ckpt_src_")
-    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_out_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_meta_").toString
+    val src = java.nio.file.Paths.get(TempDirs.create("graft_ckpt_src_"))
+    val out = TempDirs.create("graft_ckpt_out_")
+    val ckpt = TempDirs.create("graft_ckpt_meta_")
     val fixture = java.nio.file.Paths.get(s"${sf()}/events.parquet")
     java.nio.file.Files.copy(fixture, src.resolve("batch1.parquet"))
 
@@ -388,10 +388,10 @@ class StreamingSpec extends SparkSpec {
 
   test("stream -> store ingest: batch-keyed versions, exactly-once, replay-idempotent") {
     import graft.store.Store
-    val src = java.nio.file.Files.createTempDirectory("graft_ing_src_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ing_ckpt_").toString
+    val src = java.nio.file.Paths.get(TempDirs.create("graft_ing_src_"))
+    val ckpt = TempDirs.create("graft_ing_ckpt_")
     val store = new Store(spark,
-      java.nio.file.Files.createTempDirectory("graft_ing_store_").toString)
+      TempDirs.create("graft_ing_store_"))
     val fixture = java.nio.file.Paths.get(s"${sf()}/events.parquet")
     java.nio.file.Files.copy(fixture, src.resolve("batch1.parquet"))
 
@@ -424,10 +424,10 @@ class StreamingSpec extends SparkSpec {
   test("stream -> store CDC merge sink: upserts, deletes, replay-idempotent") {
     import spark.implicits._
     import graft.store.Store
-    val src = java.nio.file.Files.createTempDirectory("graft_cdc_src_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt_").toString
+    val src = java.nio.file.Paths.get(TempDirs.create("graft_cdc_src_"))
+    val ckpt = TempDirs.create("graft_cdc_ckpt_")
     val store = new Store(spark,
-      java.nio.file.Files.createTempDirectory("graft_cdc_store_").toString)
+      TempDirs.create("graft_cdc_store_"))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType),

@@ -1,8 +1,8 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
+
+import graft.TempDirs
 
 /** The merge-marker conflict window ([[Store.mergeMove]]): merge()'s
   * delete-column precheck is check-then-act and skips NowKey labels, so
@@ -15,7 +15,7 @@ class StoreMergeMarkerSpec extends graft.SparkSpec {
 
   private def setup(): (Store, Path, Path) = {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_marker_").toString
+    val root = TempDirs.create("graft_marker_")
     val store = new Store(spark, root)
     store.load(Seq((1L, "a")).toDF("id", "v"), "t", externalKey = "v1")
     store.merge(Seq((1L, "b")).toDF("id", "v"), "t", Seq("id"), externalKey = "m1")
@@ -25,7 +25,7 @@ class StoreMergeMarkerSpec extends graft.SparkSpec {
   }
 
   private def stageMarker(content: String): Path = {
-    val staging = new Path(Files.createTempDirectory("graft_marker_stage_").toString)
+    val staging = new Path(TempDirs.create("graft_marker_stage_"))
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val vRel = s"${Store.VersionCol}=${Store.encodeVersion("m1")}"
     val out = fs.create(new Path(new Path(staging, vRel), Store.MergeFile), true)
