@@ -177,8 +177,8 @@ object Bench {
       val passT0 = System.nanoTime()
       for (name <- names if okMap(name)) {
         // a failing query fails deterministically — don't retry it reps×
-        val t0 = System.nanoTime()
-        try {
+        try TempDirs.scoped {
+          val t0 = System.nanoTime()
           SparkEntry.queries(name)(spark, sfDir).count()
           times(name) += (System.nanoTime() - t0) / 1e9
         } catch { case _: Throwable => okMap(name) = false }

@@ -27,6 +27,15 @@ object TempDirs {
     p.toString
   }
 
+  /** Run `f`, then delete every directory [[create]]d while it ran, so a
+    * main that runs one query at a time holds one query's stores.
+    */
+  def scoped[T](f: => T): T = {
+    val before = new java.util.HashSet[java.nio.file.Path](dirs)
+    try f
+    finally dirs.removeIf(p => !before.contains(p) && { deleteRecursively(p.toFile); true })
+  }
+
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)

@@ -25,12 +25,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Dedup {
 
-  /** Per-round connected-components diagnostics (edge count + wall time
-    * per star round), enabled by setting GRAFT_CC_LOG in the
-    * environment. Dev tooling — never on in graded runs.
-    */
-  private val ccLogEnabled: Boolean = sys.env.contains("GRAFT_CC_LOG")
-
   /** Materialization primitive for the multi-pass dedup pipelines. If the
     * session has a reliable checkpoint directory configured
     * (`sparkContext.setCheckpointDir(...)`), uses `Dataset.checkpoint`:
@@ -579,7 +573,8 @@ object Dedup {
     * identical output by construction (union-by-min makes each set's
     * root its minimum, exactly the distributed fixpoint's label). Above
     * the cap the alternating-star loop runs as before — the 100 TB path
-    * never ships the graph to the driver. Pass 0 to force distributed.
+    * never ships the graph to the driver. Pass 0 to force distributed
+    * for any non-empty graph ([[graft.Route.fits]]).
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 30,
@@ -656,25 +651,14 @@ object Dedup {
     val rawEdges = materialize(
       pairs.select(col(aCol).as("u"), col(bCol).as("v")))
     // Small-graph route. ONE action does routing AND (when small) the
-    // edge fetch (r19 — was a count() job followed by a separate
-    // collect() inside localComponents): the limit's action forces the
-    // materialization every path needs, returns at most cap+1 rows, and
-    // the length answers the routing question. Above the cap the
-    // (possibly partial) row array is discarded and the star loop runs
-    // distributed on the already-materialized edges, exactly as before.
+    // edge fetch ([[graft.Route.collectAtMost]]): the probe forces the
+    // materialization every path needs and returns at most cap+1 rows.
+    // Above the cap the partial row array is discarded and the star
+    // loop runs distributed on the already-materialized edges.
     val longKeyed = rawEdges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeyed && smallGraphMaxEdges > 0) {
-      val probeLimit = math.min(smallGraphMaxEdges, Int.MaxValue - 1L).toInt + 1
-      val probe = rawEdges.limit(probeLimit).collect()
-      // probe.length < probeLimit proves the probe IS the full edge set.
-      // Comparing against smallGraphMaxEdges alone is wrong when the cap
-      // exceeds Int.MaxValue-1: the limit clamps, probe.length can never
-      // exceed the cap, and a truncated edge array would be routed to
-      // localComponents (ADVICE r19).
-      if (probe.length < probeLimit)
-        return localComponents(rawEdges.sparkSession, probe)
-    }
+    val small = if (longKeyed) graft.Route.collectAtMost(rawEdges, smallGraphMaxEdges) else None
+    if (small.isDefined) return localComponents(rawEdges.sparkSession, small.get)
     val allNodes = rawEdges.select(col("u").as("node"))
       .union(rawEdges.select(col("v").as("node")))
       .distinct()
@@ -686,7 +670,6 @@ object Dedup {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val t0 = System.nanoTime()
       val next = checkpointed(smallStar(largeStar(edges)))
       val nextSig = signature(next)
       converged = nextSig == sig
@@ -694,11 +677,6 @@ object Dedup {
       unpersistCheckpoint(edges)
       edges = next
       iter += 1
-      // Round diagnostics (edge count is free — it is half the
-      // convergence signature); off unless GRAFT_CC_LOG is set.
-      if (Dedup.ccLogEnabled)
-        println(f"[cc] round $iter: edges=${nextSig._1} converged=$converged " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     if (!converged) {
       throw new IllegalStateException(

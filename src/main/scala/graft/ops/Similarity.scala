@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.functions.VectorExpressions.dotD
-import graft.store.FileStats
+import graft.Route
 
 /** Embedding similarity search over `ArrayType(FloatType)` columns.
   *
@@ -568,10 +568,8 @@ object Similarity {
     // contract; only the CORPUS side's id column varies with the caller.
     require(cand.columns.contains("vec_id"),
       s"candidate frame must carry 'vec_id' (got ${cand.columns.mkString(",")})")
-    val ids = cand.select("vec_id").distinct().limit(maxIds + 1)
-      .collect().map(_.get(0))
-    if (ids.length > maxIds) corpus
-    else {
+    Route.collectAtMost(cand.select("vec_id").distinct(), maxIds).fold(corpus) { rows =>
+      val ids = rows.map(_.get(0))
       val exact = col(idCol).isin(ids.toSeq: _*)
       val longs = ids.collect {
         case l: java.lang.Long => l.longValue()
@@ -860,18 +858,18 @@ object Similarity {
       maxFitRows: Long = 100000L): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val d6 = org.apache.spark.sql.types.DecimalType(18, 6)
-    // Row counts only when the route actually depends on them —
-    // maxExactRows = Long.MaxValue (pinned-exact callers, e.g. the
-    // graded query) and <= 0 (forced-routed) skip the two count jobs.
-    lazy val nSrc = FileStats.planRowUpperBound(src).getOrElse(src.count())
-    lazy val nTgt = FileStats.planRowUpperBound(tgt).getOrElse(tgt.count())
-    val exact = maxExactRows == Long.MaxValue ||
-      (maxExactRows > 0 && nSrc + nTgt <= maxExactRows)
-    def knn(corpus: DataFrame, queries: DataFrame) =
+    // Row counts only when the route depends on them
+    // ([[graft.Route.fits]]): maxExactRows = Long.MaxValue (pinned-exact
+    // callers, e.g. the graded query) and < 0 (forced-routed) skip them,
+    // and the routed leg reuses them to size each corpus's cells.
+    lazy val nSrc = Route.rows(src)
+    lazy val nTgt = Route.rows(tgt)
+    val exact = Route.fits(maxExactRows)(nSrc + nTgt)
+    def knn(corpus: DataFrame, queries: DataFrame, corpusRows: => Long) =
       if (exact) topKPerQuery(corpus, queries, idCol, vecCol, k,
         excludeSelf = false)
       else ivfTopKBulk(corpus, queries, idCol, vecCol, k, nProbe,
-        maxFitRows, None, excludeSelf = false)
+        maxFitRows, Some(corpusRows), excludeSelf = false)
     // The two directions index DIFFERENT corpora (fwd fits tgt, bwd
     // fits src) — nothing to share, but on the routed leg each
     // construction runs an EAGER coarse-quantizer fit (fitCells: a
@@ -880,9 +878,9 @@ object Similarity {
     // back-to-back. The exact leg is construction-lazy — threads would
     // buy nothing — and stays inline.
     val Seq(fwd, bwd) =
-      if (exact) Seq(knn(tgt, src), knn(src, tgt))
+      if (exact) Seq(knn(tgt, src, nTgt), knn(src, tgt, nSrc))
       else graft.Concurrency.inParallel(Seq[() => DataFrame](
-        () => knn(tgt, src), () => knn(src, tgt)))(_.apply())
+        () => knn(tgt, src, nTgt), () => knn(src, tgt, nSrc)))(_.apply())
     val sumS = fwd.groupBy("query_id")
       .agg(sum(col("sim").cast(d6)).as("__sum_s"),
         count(lit(1)).as("__cnt_s"))
@@ -1014,20 +1012,14 @@ object Similarity {
     */
   val DefaultExactCosineRows: Long = 20000L
 
-  /** The [[dedupByCosine]] routing decision, factored out so tests can
-    * pin it without running either detector.
-    */
-  private[graft] def cosineDetectorFor(rows: Long, maxExactRows: Long): String =
-    if (rows <= maxExactRows) "exact" else "semdedup"
-
   /** Embedding near-dup dedup applied end-to-end — the cosine analog of
     * [[Dedup.dedupByJaccard]]: detect duplicate pairs, cluster them via
     * connected components (large-star/small-star), keep the smallest id
     * per cluster. Non-clustered rows survive.
     *
-    * The detector ROUTES on corpus size (footer metadata, else one
-    * count() job): up to `maxExactRows` it is the exact block-grid
-    * self-join ([[nearDupPairs]] — every pair scored, quadratic FLOPs);
+    * The detector ROUTES on corpus size ([[Route.fits]]): up to
+    * `maxExactRows` it is the exact block-grid self-join
+    * ([[nearDupPairs]] — every pair scored, quadratic FLOPs);
     * above, it is the cell-pruned [[semDedupPairs]] path (corpus-adaptive
     * nlist, 3-probe soft assignment — O(n·cellRows) candidate volume,
     * the SemDeDup semantics a corpus-scale dedup actually deploys, at
@@ -1043,12 +1035,12 @@ object Similarity {
       threshold: Double,
       numBlocks: Int = 16,
       maxExactRows: Long = DefaultExactCosineRows): DataFrame = {
-    val rows = FileStats.planRowUpperBound(corpus).getOrElse(corpus.count())
-    val pairs = cosineDetectorFor(rows, maxExactRows) match {
-      case "exact" => nearDupPairs(corpus, idCol, vecCol, threshold, numBlocks)
-      case _ => semDedupPairs(corpus, idCol, vecCol, threshold,
+    lazy val rows = Route.rows(corpus)
+    val pairs =
+      if (Route.fits(maxExactRows)(rows))
+        nearDupPairs(corpus, idCol, vecCol, threshold, numBlocks)
+      else semDedupPairs(corpus, idCol, vecCol, threshold,
         assignProbes = 3, corpusRows = Some(rows))
-    }
     Dedup.applyComponents(corpus, pairs, "id_a", "id_b", idCol)
   }
 
@@ -1259,14 +1251,8 @@ object Similarity {
 
     require(dim % m == 0, s"dim $dim must be divisible by m $m")
     require(shortlist >= k, "shortlist must be >= k")
-    // nlist <= 0 (default): √n cells via [[ivfNlistFor]], same sizing
-    // ladder as [[ivfTopK]].
-    val (nl, sizedRows) =
-      if (nlist > 0) (nlist, corpusRows)
-      else {
-        val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
-        (ivfNlistFor(rows), Some(rows))
-      }
+    // nlist <= 0 (default): √n cells via [[ivfNlistFor]], as [[ivfTopK]].
+    val (nl, sizedRows) = cellsFor(corpus, nlist, corpusRows)(ivfNlistFor)
     // One bounded sample feeds BOTH trainers (coarse cells + PQ codebook).
     val (cellAssigned, centroids, fitVectors) =
       fitCells(corpus, idCol, vecCol, nl, maxFitRows, sizedRows)
@@ -1332,9 +1318,8 @@ object Similarity {
     * codes (and every ANN result derived from them) change under
     * concurrent refits and sample drift across re-runs. Vectors are
     * L2-normalized before the fit (pass `preNormalized = true` when the
-    * input column already is); sizing follows the [[pqTopK]] ladder —
-    * caller hint, then parquet-footer metadata (exact — shrunk plans
-    * fall back), then a column-pruned count() job.
+    * input column already is); the sample is sized by [[Route.rows]]
+    * (see [[onFitSample]]).
     */
   def trainPqCodebookFor(
       corpus: DataFrame,
@@ -1348,19 +1333,8 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must be divisible by m $m")
     val nvCol = if (preNormalized) col(vecCol) else normalize(asDouble(col(vecCol)))
     val e = corpus.select(nvCol.as("nv"))
-    val nRows = corpusRows.orElse(FileStats.planRowUpperBound(e)).getOrElse(e.count())
-    val fitInput =
-      if (nRows <= maxFitRows) e
-      else e.sample(withReplacement = false, maxFitRows.toDouble / nRows, seed = 42L)
-    val sample0 = fitInput.collect()
-      .map(_.getSeq[Double](0).toArray).filter(_.length == dim)
-    // A stale OVERestimated caller hint undersamples — possibly to
-    // empty. Rather than crash a non-empty corpus, refit from a bounded
-    // prefix (still maxFitRows-capped).
-    val sample =
-      if (sample0.nonEmpty || nRows <= maxFitRows) sample0
-      else e.limit(math.min(maxFitRows, Int.MaxValue.toLong).toInt)
-        .collect().map(_.getSeq[Double](0).toArray).filter(_.length == dim)
+    val sample = onFitSample(e, maxFitRows, corpusRows)(
+      _.collect().map(_.getSeq[Double](0).toArray).filter(_.length == dim))(_.isEmpty)
     require(sample.nonEmpty, s"no fit vectors of dim $dim")
     PqCodebook(trainPqCodebook(sample, dim, m, ksub), dim, m, ksub)
   }
@@ -1462,10 +1436,8 @@ object Similarity {
     *
     * `corpusRows` is the caller-supplied corpus size hint (e.g. from
     * table metadata — [[graft.Tables.parquetRowCount]] reads it from
-    * parquet footers driver-side). Without a hint, [[FileStats.planRowUpperBound]]
-    * derives one from the plan's own parquet footers; only plans with
-    * non-file sources fall back to a count() job (column-pruned, but
-    * still an extra stage over a 100 TB corpus).
+    * parquet footers driver-side); without one the sample is sized by
+    * [[Route.rows]] (see [[onFitSample]]).
     */
   private[ops] def fitCells(
       corpus: DataFrame,
@@ -1478,22 +1450,11 @@ object Similarity {
     val e = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
       .withColumn("nv", normalize(col("v")))
       .withColumn("features", array_to_vector(col("nv")))
-    val nRows = corpusRows.orElse(FileStats.planRowUpperBound(e)).getOrElse(e.count())
-    val fitInput0 =
-      if (nRows <= maxFitRows) e
-      else e.sample(withReplacement = false, maxFitRows.toDouble / nRows, seed = 42L)
-    // A stale OVERestimated caller hint undersamples — possibly to
-    // empty, which throws deep inside the KMeans fit. Probe with a
-    // limit(1) job only when sampling actually happened and refit from
-    // a bounded prefix instead of crashing a non-empty corpus. (The
-    // footer path can no longer overestimate: shrunk plans fall back to
-    // count() — see [[FileStats.planRowUpperBound]].)
-    val fitInput =
-      if (nRows <= maxFitRows || fitInput0.limit(1).count() > 0) fitInput0
-      else e.limit(math.min(maxFitRows, Int.MaxValue.toLong).toInt)
+    val fitInput = onFitSample(e, maxFitRows, corpusRows)(nonEmptyPartitions)(
+      _.rdd.getNumPartitions == 0)
     val km = new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
       .setFeaturesCol("features").setPredictionCol("cell")
-    val model = km.fit(nonEmptyPartitions(fitInput))
+    val model = km.fit(fitInput)
     val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray) }.toSeq
     // Hard assignment stays on the ML transform at EVERY nlist: it is
@@ -1527,6 +1488,35 @@ object Similarity {
       org.apache.spark.rdd.PartitionPruningRDD.create(rdd, keep), df.schema)
   }
 
+  /** `nlist` cells when set, else `nlistFor` the corpus rows
+    * ([[Route.rows]]), with the rows when counted so the fit sample
+    * reuses them.
+    */
+  private def cellsFor(corpus: DataFrame, nlist: Int, corpusRows: Option[Long])(
+      nlistFor: Long => Int): (Int, Option[Long]) =
+    if (nlist > 0) (nlist, corpusRows)
+    else {
+      val rows = Route.rows(corpus, corpusRows)
+      (nlistFor(rows), Some(rows))
+    }
+
+  /** `fit` applied to the rows a model trains on: all of `e` when it
+    * has at most `maxFitRows` rows ([[Route.fits]] on [[Route.rows]],
+    * `corpusRows` the caller's hint), else a seeded sample of about
+    * `maxFitRows`. A stale OVERestimated hint undersamples, possibly to
+    * empty; when `isEmpty` says so, the fit reruns on the first
+    * `maxFitRows` rows instead of failing on a non-empty corpus.
+    */
+  private def onFitSample[A](e: DataFrame, maxFitRows: Long, corpusRows: Option[Long])(
+      fit: DataFrame => A)(isEmpty: A => Boolean): A = {
+    lazy val nRows = Route.rows(e, corpusRows)
+    if (Route.fits(maxFitRows)(nRows)) fit(e)
+    else {
+      val sampled = fit(e.sample(withReplacement = false, maxFitRows.toDouble / nRows, seed = 42L))
+      if (isEmpty(sampled)) fit(Route.prefix(e, maxFitRows)) else sampled
+    }
+  }
+
   /** SemDeDup (semantic dedup, the LAION/DataComp-scale pipeline op):
     * cluster the corpus with the coarse quantizer and detect cosine
     * near-dup pairs ONLY within clusters — one equality self-join on the
@@ -1544,9 +1534,8 @@ object Similarity {
     * `nlist <= 0` (the DEFAULT) sizes the cell count from the corpus via
     * [[semDedupNlistFor]] — the measured scale lever (129 s → 9.4 s at
     * 60k vectors for identical pairs, SCALEBENCH_r7) should not require
-    * the caller to know it exists. The row count comes from the caller
-    * hint, then parquet footers, then a count() job — the same sizing
-    * ladder as the fit sample, resolved ONCE and shared with it.
+    * the caller to know it exists. The row count ([[Route.rows]]) is
+    * resolved ONCE and shared with the fit sample.
     */
   def semDedupPairs(
       corpus: DataFrame,
@@ -1557,12 +1546,7 @@ object Similarity {
       assignProbes: Int = 1,
       maxFitRows: Long = 100000L,
       corpusRows: Option[Long] = None): DataFrame = {
-    val (nl, sizedRows) =
-      if (nlist > 0) (nlist, corpusRows)
-      else {
-        val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
-        (semDedupNlistFor(rows), Some(rows))
-      }
+    val (nl, sizedRows) = cellsFor(corpus, nlist, corpusRows)(semDedupNlistFor(_))
     require(assignProbes >= 1 && assignProbes <= nl,
       s"assignProbes must be in [1, nlist], got $assignProbes")
     val (assigned, centroids, _) =
@@ -1887,10 +1871,9 @@ object Similarity {
       .unionByName(reference.select(
         struct(lit(1).as("side"), col(idCol).as("id")).as("uid"),
         asDouble(col(vecCol)).as("v")))
-    val rows = combinedRows.orElse(FileStats.planRowUpperBound(u)).getOrElse(u.count())
-    val nl = if (nlist > 0) nlist else semDedupNlistFor(rows)
+    val (nl, sizedRows) = cellsFor(u, nlist, combinedRows)(semDedupNlistFor(_))
     val probes = math.min(assignProbes, nl)
-    val (assigned, centroids, _) = fitCells(u, "uid", "v", nl, maxFitRows, Some(rows))
+    val (assigned, centroids, _) = fitCells(u, "uid", "v", nl, maxFitRows, sizedRows)
     val soft = softAssign(assigned, centroids, probes)
     val t = soft.where(col("vec_id.side") === 0)
       .select(col("cell"), col("vec_id.id").as("target_id"), col("nv").as("nvt"))
@@ -1910,8 +1893,8 @@ object Similarity {
     * family (qn22/qn37/qn43 remove verbatim leaks; this removes
     * paraphrased ones).
     *
-    * The detector ROUTES on the COMBINED corpus size (parquet footers,
-    * else one count() per side), mirroring [[dedupByCosine]]: up to
+    * The detector ROUTES on the COMBINED corpus size ([[Route.rows]] of
+    * each side), mirroring [[dedupByCosine]]: up to
     * `maxExactRows` rows it is the exact bipartite grid
     * ([[crossCorpusCosinePairs]] — every pair scored); above, the
     * cell-pruned [[crossCorpusSemanticPairs]] (adaptive nlist, 3-probe
@@ -1925,18 +1908,13 @@ object Similarity {
       vecCol: String,
       threshold: Double,
       maxExactRows: Long = DefaultExactCosineRows): DataFrame = {
-    val rows =
-      (FileStats.planRowUpperBound(target), FileStats.planRowUpperBound(reference)) match {
-        case (Some(t), Some(r)) => t + r
-        case _ => target.count() + reference.count()
-      }
-    val flagged = cosineDetectorFor(rows, maxExactRows) match {
-      case "exact" =>
+    lazy val rows = Route.rows(target) + Route.rows(reference)
+    val flagged =
+      if (Route.fits(maxExactRows)(rows))
         crossCorpusCosinePairs(target, reference, idCol, vecCol, threshold)
-      case _ =>
+      else
         crossCorpusSemanticPairs(target, reference, idCol, vecCol, threshold,
           combinedRows = Some(rows))
-    }
     target.join(flagged.select(col("target_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
   }
@@ -2023,7 +2001,7 @@ object Similarity {
     * Labels with a single member have no candidate and are absent.
     *
     * ROUTES on corpus size like [[dedupByCosine]]: up to `maxExactRows`
-    * rows (footer metadata, else one count() job) the selection is the
+    * rows ([[Route.fits]]) the selection is the
     * exact per-label self-join — O(Σ n_label²) FLOPs, every same-label
     * pair scored; above, the cell-pruned path ([[fitCells]] coarse
     * quantizer + `assignProbes`-probe soft assignment on BOTH sides,
@@ -2043,12 +2021,10 @@ object Similarity {
       maxExactRows: Long = DefaultExactCosineRows,
       assignProbes: Int = 3,
       maxFitRows: Long = 100000L): DataFrame = {
-    val rows = FileStats.planRowUpperBound(embs).getOrElse(embs.count())
-    cosineDetectorFor(rows, maxExactRows) match {
-      case "exact" => positivePairsExact(embs, idCol, vecCol, labelCol)
-      case _ => positivePairsCellPruned(embs, idCol, vecCol, labelCol,
-        assignProbes, maxFitRows, rows)
-    }
+    lazy val rows = Route.rows(embs)
+    if (Route.fits(maxExactRows)(rows)) positivePairsExact(embs, idCol, vecCol, labelCol)
+    else positivePairsCellPruned(embs, idCol, vecCol, labelCol,
+      assignProbes, maxFitRows, rows)
   }
 
   /** The exact [[positivePairs]] leg: per-label self-join + bounded-heap
@@ -2157,9 +2133,9 @@ object Similarity {
       maxFitRows: Long = 100000L): DataFrame = {
     val c = corpus.select(col(idCol).cast("long").as("cid"),
       col(labelCol).as("clabel"), normalize(asDouble(col(vecCol))).as("vc"))
-    val rows = FileStats.planRowUpperBound(corpus).getOrElse(corpus.count())
-    val top = cosineDetectorFor(rows, maxExactRows) match {
-      case "exact" =>
+    lazy val rows = Route.rows(corpus)
+    val top =
+      if (Route.fits(maxExactRows)(rows)) {
         // Pre-normalize once per side so the 5M-pair hot loop is a
         // single codegen'd dot product (cos(a,b) = dot(â,b̂)) instead of
         // the interpreted dot+two-norms HOF per pair — 25.3 s → 1.7 s
@@ -2172,7 +2148,7 @@ object Similarity {
             dotD(col("va"), col("vc")), col("cid"), 1).as("__t"))
           .select(col("aid"), col("alabel"),
             col("__t").getItem(0).getField("vec_id").as("nn_id"))
-      case _ =>
+      } else {
         // Cell-count sizing for an EVAL op whose anchor count grows
         // WITH the corpus: candidate volume is |anchors|·nProbe·(n/nl),
         // so √n cells (right for few-query serving) leave √n-sized
@@ -2202,7 +2178,7 @@ object Similarity {
             dotD(col("nv"), col("vc")), col("cid"), 1).as("__t"))
           .select(col("aid"), col("alabel"),
             col("__t").getItem(0).getField("vec_id").as("nn_id"))
-    }
+      }
     top.join(c.select(col("cid").as("nn_id"), col("clabel").as("nn_label")), "nn_id")
       .groupBy(col("alabel").as("label"))
       .agg(
@@ -2288,11 +2264,10 @@ object Similarity {
       maxFitRows: Long,
       corpusRows: Option[Long],
       excludeSelf: Boolean = true): DataFrame = {
-    val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
-    val nl = ivfNlistFor(rows)
+    val (nl, sizedRows) = cellsFor(corpus, 0, corpusRows)(ivfNlistFor)
     val probes = math.min(math.max(1, nProbe), nl)
     val (assigned, centroids, _) =
-      fitCells(corpus, idCol, vecCol, nl, maxFitRows, Some(rows))
+      fitCells(corpus, idCol, vecCol, nl, maxFitRows, sizedRows)
     // Candidates keep their HARD cell (one cell per candidate), so a
     // (query, candidate) pair is scored at most once — no distinct.
     // Keep the caller's id TYPE (the exact leg does): a long cast
@@ -2325,12 +2300,7 @@ object Similarity {
       maxFitRows: Long = 100000L,
       corpusRows: Option[Long] = None): DataFrame = {
 
-    val (nl, sizedRows) =
-      if (nlist > 0) (nlist, corpusRows)
-      else {
-        val rows = corpusRows.orElse(FileStats.planRowUpperBound(corpus)).getOrElse(corpus.count())
-        (ivfNlistFor(rows), Some(rows))
-      }
+    val (nl, sizedRows) = cellsFor(corpus, nlist, corpusRows)(ivfNlistFor)
     val (assigned, centroids, _) =
       fitCells(corpus, idCol, vecCol, nl, maxFitRows, sizedRows)
     val centroidDf = corpus.sparkSession.createDataFrame(centroids)

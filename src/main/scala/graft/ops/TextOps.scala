@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.store.FileStats
+import graft.Route
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language ID, fingerprinting, shingling.
@@ -90,23 +90,23 @@ object TextOps {
     var vocab = vocab0.persist(lvl)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     try {
-      // Small-vocabulary route: the count materializes the cached vocab —
+      // Small-vocabulary route: one bounded probe
+      // ([[Route.collectAtMost]]) materializes the cached vocab —
       // work the distributed loop's first census pays anyway — and when
-      // the word-TYPE table is driver-sized the whole merge loop runs
-      // locally on the collected vocabulary (2 jobs total instead of 2
-      // per round; the per-round argmax census on a tiny table was pure
-      // job-scheduling overhead). Pair census, argmax tie-break
-      // (count desc, pair asc in UTF-8 binary order — UTF8String's
-      // ordering) and the greedy non-overlapping apply replicate the
-      // distributed expressions exactly; TextPropSpec pins route
-      // equality — random corpora plus explicit fixtures for count
-      // ties, overlapping merges, and the non-BMP tie where UTF-8
-      // byte order diverges from Java's UTF-16 comparison.
-      if (smallVocabMaxRows > 0 && vocab.count() <= smallVocabMaxRows) {
-        val words = vocab.collect().map { r =>
-          (r.getLong(0), r.getSeq[String](1).toArray)
-        }
-        merges ++= bpeTrainLocal(words, numMerges)
+      // the word-TYPE table is driver-sized its rows ARE the collected
+      // vocabulary, and the whole merge loop runs locally (one action
+      // instead of 2 jobs per round; the per-round argmax census on a
+      // tiny table was pure job-scheduling overhead). Pair census,
+      // argmax tie-break (count desc, pair asc in UTF-8 binary order —
+      // UTF8String's ordering) and the greedy non-overlapping apply
+      // replicate the distributed expressions exactly; TextPropSpec pins
+      // route equality — random corpora plus explicit fixtures for count
+      // ties, overlapping merges, and the non-BMP tie where UTF-8 byte
+      // order diverges from Java's UTF-16 comparison.
+      val small = Route.collectAtMost(vocab, smallVocabMaxRows)
+      if (small.isDefined) {
+        merges ++= bpeTrainLocal(
+          small.get.map(r => (r.getLong(0), r.getSeq[String](1).toArray)), numMerges)
       } else {
       var r = 1
       var done = false
@@ -1347,9 +1347,9 @@ object TextOps {
       maxIter: Int = 50,
       localFitMaxRows: Long = DefaultLocalFitMaxRows): QualityModel = {
     val y = when(label.getOrElse(qualityRules(col(textCol)).keep), 1d).otherwise(0d)
-    // Size from parquet footers when the plan exposes them (driver-side
-    // metadata, no job) — the count() job runs only for non-file inputs.
-    val n = FileStats.planRowUpperBound(docs).getOrElse(docs.count())
+    // Sized by [[Route.rows]] only when the caps need it; the
+    // distributed leg below reuses the count.
+    lazy val n = Route.rows(docs)
     // Driver route (r20, the BPE small-vocab pattern): when the WHOLE
     // input is fit-sample-sized, featurize distributed once, collect the
     // skinny (label, features) rows, and run the identical L-BFGS
@@ -1359,7 +1359,7 @@ object TextOps {
     // same gates; above the cap the distributed spark.ml path is
     // untouched (the 100 TB story: a corpus that big is sampled and fit
     // distributed exactly as before).
-    if (n <= localFitMaxRows && n <= maxTrainRows) {
+    if (Route.fits(math.min(localFitMaxRows, maxTrainRows))(n)) {
       val rows = docs.where(col(textCol).isNotNull)
         .select(y.as("label"),
           concat(auxQualityFeatures(col(textCol)),
@@ -1382,14 +1382,7 @@ object TextOps {
         tol = 1e-7)
       return QualityModel(fitted.coefficients, fitted.intercepts(0), dim)
     }
-    // CEIL division: floor put the modulus at 1 for n in
-    // (maxTrainRows, 2·maxTrainRows), keeping EVERY row — up to ~2× the
-    // documented cap. Ceil bounds the expected sample at maxTrainRows.
-    val sampled =
-      if (n <= maxTrainRows) docs
-      else docs.where(
-        pmod(xxhash64(col(textCol)),
-          lit((n + maxTrainRows - 1) / maxTrainRows)) === 0)
+    val sampled = hashSample(docs, textCol, n, maxTrainRows)
     import org.apache.spark.ml.functions.array_to_vector
     // Null text cannot featurize (a null feature vector NPEs the fit);
     // the composite quality filter drops such rows anyway.
@@ -1531,8 +1524,7 @@ object TextOps {
     // unchanged (it re-derives its row count; the duplicate count() job
     // exists only for non-footer-readable inputs above the cap, where
     // the fit itself dwarfs it).
-    val n = FileStats.planRowUpperBound(docs).getOrElse(docs.count())
-    if (n > localFitMaxRows || n > maxTrainRows)
+    if (!Route.fits(math.min(localFitMaxRows, maxTrainRows))(Route.rows(docs)))
       return trainDomainModelWithMl(
         docs, textCol, labelCol, dim, maxTrainRows, regParam, maxIter,
         classBalance, charDim, charN)._1
@@ -1545,15 +1537,9 @@ object TextOps {
     // the distributed path. With n <= maxTrainRows there is no hash
     // sample, so the only rows the vocabulary could see that the fit
     // cannot are null-TEXT rows — mirror the distributed numClasses
-    // fail-fast for that case below. The 4096 guard is the same
-    // mistaken-labelCol tripwire.
+    // fail-fast for that case below.
     val fitLabels = rows.map(_.getString(0))
-    val labels = docs.select(labelCol).where(col(labelCol).isNotNull)
-      .distinct().orderBy(labelCol).limit(4097)
-      .collect().map(_.getString(0))
-    require(labels.length >= 2, "need at least two domain labels")
-    require(labels.length <= 4096,
-      s"'$labelCol' has > 4096 distinct values — not a domain label column")
+    val labels = domainLabels(docs, labelCol)
     val seen = fitLabels.toSet
     require(seen.size == labels.length,
       s"domain '$labelCol' has ${labels.length} labels but only " +
@@ -1575,6 +1561,30 @@ object TextOps {
       tol = 1e-7)
     DomainModel(labels, fitted.coefficients, fitted.intercepts, dim,
       charDim = math.max(charDim, 0), charN = charN)
+  }
+
+  /** The distributed fits' training rows: all `n` of `docs` up to
+    * `maxTrainRows`, else a deterministic hash sample of about
+    * `maxTrainRows`. CEIL division: floor put the modulus at 1 for n in
+    * (maxTrainRows, 2·maxTrainRows), keeping EVERY row — up to ~2× the
+    * documented cap.
+    */
+  private def hashSample(docs: DataFrame, textCol: String, n: Long, maxTrainRows: Long): DataFrame =
+    if (n <= maxTrainRows) docs
+    else docs.where(pmod(xxhash64(col(textCol)), lit((n + maxTrainRows - 1) / maxTrainRows)) === 0)
+
+  /** The sorted distinct non-null values of `labelCol`, at least two.
+    * Domains are a handful of strings by construction; the 4096 cap
+    * keeps a mistaken labelCol (a doc id, a URL) from collecting a
+    * corpus-sized vocabulary onto the driver.
+    */
+  private def domainLabels(docs: DataFrame, labelCol: String): Array[String] = {
+    val labels = Route.collectAtMost(
+      docs.select(labelCol).where(col(labelCol).isNotNull).distinct().orderBy(labelCol), 4096)
+    require(labels.isDefined,
+      s"'$labelCol' has > 4096 distinct values — not a domain label column")
+    require(labels.get.length >= 2, "need at least two domain labels")
+    labels.get.map(_.getString(0))
   }
 
   /** The domain-classifier feature row: dense aux stats, `dim`
@@ -1614,21 +1624,9 @@ object TextOps {
       charN: Int = 3)
       : (DomainModel,
          org.apache.spark.ml.classification.LogisticRegressionModel) = {
-    // Domains are a handful of strings by construction; the 4096 guard
-    // keeps a mistaken labelCol (a doc id, a URL) from collecting a
-    // corpus-sized vocabulary onto the driver.
-    val labels = docs.select(labelCol).where(col(labelCol).isNotNull)
-      .distinct().orderBy(labelCol).limit(4097)
-      .collect().map(_.getString(0))
-    require(labels.length >= 2, "need at least two domain labels")
-    require(labels.length <= 4096,
-      s"'$labelCol' has > 4096 distinct values — not a domain label column")
-    val n = FileStats.planRowUpperBound(docs).getOrElse(docs.count())
-    val sampled =
-      if (n <= maxTrainRows) docs
-      else docs.where(
-        pmod(xxhash64(col(textCol)),
-          lit((n + maxTrainRows - 1) / maxTrainRows)) === 0)
+    val labels = domainLabels(docs, labelCol)
+    val n = Route.rows(docs)
+    val sampled = hashSample(docs, textCol, n, maxTrainRows)
     import org.apache.spark.ml.functions.array_to_vector
     val labelIdx = labels.zipWithIndex.tail.foldLeft(
       when(col(labelCol) === labels.head, 0d)) {

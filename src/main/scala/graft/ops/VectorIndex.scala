@@ -4,7 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.store.{FileStats, Store}
+import graft.Route
+import graft.store.Store
 
 /** ANN index LIFECYCLE: build an IVF index once, persist it into the
   * versioned [[Store]], and serve top-k from the persisted artifact —
@@ -48,11 +49,7 @@ object VectorIndex {
       externalKey: String = "v1",
       maxFitRows: Long = 100000L): (Int, Long) = {
     val spark = corpus.sparkSession
-    // Footer-derived row count when the plan is count-preserving (exact
-    // by [[FileStats.planRowUpperBound]]'s contract) — skips a full
-    // count() job per build; shrunk/unknown plans still pay the exact
-    // count.
-    val rows = FileStats.planRowUpperBound(corpus).getOrElse(corpus.count())
+    val rows = Route.rows(corpus)
     val nl = if (nlist > 0) nlist else Similarity.ivfNlistFor(rows)
     val (assigned, centroids, _) =
       Similarity.fitCells(corpus, idCol, vecCol, nl, maxFitRows, Some(rows))

@@ -10,7 +10,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.store.{FileStats, Store, Wire}
+import graft.store.{Store, Wire}
 
 /** Minimal HTTP façade mapping the reference `DataFrameClient` 1:1 onto
   * [[graft.store.Store]] — the reference's actual product boundary is
@@ -212,12 +212,11 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
     * DataFrame straight from it).
     *
     * The row cap is checked BEFORE any body byte, so an over-cap table
-    * answers 413 with nothing streamed. The count is exact and comes
-    * from the parquet footers of the files the read resolved to
-    * ([[FileStats.planRowUpperBound]] — a store read is a projection
-    * over a parquet scan), so it costs no Spark job. Only when that
-    * count is unavailable (more footers than its budget) does a
-    * `limit(cap+1).count()` probe job decide.
+    * answers 413 with nothing streamed. [[graft.Route.fitsProbed]]
+    * decides it from the parquet footers of the files the read resolved
+    * to (a store read is a projection over a parquet scan), so it costs
+    * no Spark job. Only when that count is unavailable (more footers
+    * than its budget) does one bounded probe job decide.
     *
     * In-cap responses stream from [[Wire.jsonRecordIterator]]. A
     * client-sized read is read and encoded on the driver, one file at a
@@ -232,9 +231,7 @@ final class StoreServer(spark: SparkSession, store: Store, port: Int = 0,
     val df = store.get(name,
       externalKey = params.get("external_key"),
       useLast = params.get("use_last").exists(_.equalsIgnoreCase("true")))
-    def overCap: Boolean = FileStats.planRowUpperBound(df).getOrElse(
-      df.limit(math.min(maxGetRows + 1, Int.MaxValue.toLong).toInt).count()) > maxGetRows
-    if (maxGetRows > 0 && overCap) {
+    if (maxGetRows > 0 && !graft.Route.fitsProbed(df, maxGetRows)) {
       respond(ex, 413, errorJson(
         s"Result for '$name' exceeds $maxGetRows rows — too large for the " +
           "records-JSON wire format; read it through the Store DataFrame API " +

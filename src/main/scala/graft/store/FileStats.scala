@@ -203,10 +203,7 @@ object FileStats {
     * fit where a count() would have been exact. Shrunk plans therefore
     * fall back to the count() job rather than mis-size the sample.
     * Projections/sorts/windows/unions preserve counts, so the returned
-    * value is exact — which is what lets
-    * [[graft.ops.Similarity.ivfTopK]]/[[graft.ops.Similarity.pqTopK]] skip the
-    * default-path `count()` — an extra full-corpus stage at 100 TB —
-    * when the caller passes no explicit `corpusRows` hint.
+    * value is exact; [[graft.Route.rows]] tries it before a `count()`.
     *
     * Cost: one driver-side footer read per file, every call (planning
     * caches file LISTINGS, not footer contents) — about a millisecond
